@@ -6,18 +6,23 @@ under INDEX_SPEC (TableIndices.java:53-115, Constants.java:44-53); index
 tables created next to the data table by IndexMasterObserver.preCreateTable
 (IndexMasterObserver.java:89-129).
 
-Layout per table (the 100 TB design):
+Layout per table (one layout for every table):
     <root>/<table>/_descriptor.json      schema + rowkey + families + indexes
-    <root>/<table>/data/                 parquet, repartitionByRange(rowkey),
-                                         sortWithinPartitions(rowkey) — the
-                                         HFile sort invariant: range scans
-                                         prune via row-group min/max stats
-    <root>/<table>/index/<name>/         parquet, range-partitioned + sorted
-                                         by (indexed cols..., rowkey)
+                                         + the live version number
+    <root>/<table>/data[_v<N>]/          parquet, hash-bucketed on the rowkey
+                                         (one file per bucket), sorted by
+                                         rowkey within each bucket
+    <root>/<table>/index[_v<N>]/<name>/  parquet, bucketed on the rowkey like
+                                         the data, sorted by (indexed cols...,
+                                         rowkey) within each bucket
 
-Both data and index files are sorted on their access key, so point/range
-reads touch O(1) row groups — the parquet analog of HFile block indexes
-(+ optional parquet bloom filters for point gets).
+Bucketing on the rowkey lets every rowkey join (mutation merges, index
+semi-join application, index maintenance) run without an Exchange on the
+stored side — the region-colocation analog (SecIndexLoadBalancer.java:
+53-58). Sorting within each bucket keeps the HFile sort invariant per
+file: point and range reads prune row groups by parquet min/max stats
+(+ parquet bloom filters for point gets — the HFile block index and
+bloom analogs).
 """
 
 from __future__ import annotations
@@ -35,8 +40,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hindex_spark.index.build import build_index
-from hindex_spark.index.spec import IndexSpecification, TableIndices
+from hindex_spark.index.spec import TableIndices
 from hindex_spark.table import Table
 
 #: serializes session-catalog DDL (DROP+CREATE pairs) across threads —
@@ -84,7 +88,6 @@ class TableDescriptor:
     rowkey_col: str
     families: List[FamilyDescriptor] = field(default_factory=list)
     indices: TableIndices = field(default_factory=TableIndices)
-    layout: str = "bucketed"  # "bucketed" | "range"
     num_buckets: int = 32
     version: int = 0
     #: column DDL per store ("__data" + one entry per index name) —
@@ -110,7 +113,6 @@ class TableDescriptor:
                     for f in self.families
                 ],
                 "indices": json.loads(self.indices.to_json()),
-                "layout": self.layout,
                 "num_buckets": self.num_buckets,
             },
             indent=2,
@@ -133,7 +135,6 @@ class TableDescriptor:
                 for f in d.get("families", [])
             ],
             TableIndices.from_json(json.dumps(d.get("indices", []))),
-            d.get("layout", "range"),
             d.get("num_buckets", 32),
             d.get("version", 0),
             d.get("schemas", {}),
@@ -318,7 +319,6 @@ class Catalog:
         self,
         table: Table,
         num_partitions: int = 32,
-        layout: str = "bucketed",
         families: Optional[List[FamilyDescriptor]] = None,
         lease_ttl: float = 600.0,
     ) -> None:
@@ -331,20 +331,18 @@ class Catalog:
         (IndexSpecification.java:57-59,111-112). Default None keeps the
         rowkey bloom on with the session codec.
 
-        ``layout="bucketed"`` (default): hash-bucketed on the rowkey and
-        sorted within buckets — every rowkey join (mutation merges, index
-        semi-join application, index maintenance) then runs WITHOUT an
-        Exchange on the stored side, the region-colocation analog
-        (SecIndexLoadBalancer.java:53-58). Row-group min/max stats still
-        prune range scans within each sorted file.
+        ``num_partitions`` is the bucket count. Data and every index are
+        hash-bucketed on the rowkey — every rowkey join (mutation merges,
+        index semi-join application, index maintenance) then runs
+        WITHOUT an Exchange on the stored side, the region-colocation
+        analog (SecIndexLoadBalancer.java:53-58). Data files are sorted
+        by rowkey and index files by (indexed cols..., rowkey) within
+        each bucket, so row-group min/max stats prune point and range
+        reads within each file.
 
-        ``layout="range"``: repartitionByRange + sortWithinPartitions —
-        file-level range pruning (the literal HFile sort invariant), at
-        the cost of a full shuffle on every mutation join.
-
-        Either way the write goes to a staging directory first and is
-        atomically swapped in, so saving a table over the path its own
-        lazy plan reads from cannot lose data.
+        The write goes to a staging directory first and is atomically
+        swapped in, so saving a table over the path its own lazy plan
+        reads from cannot lose data.
 
         Writers are serialized per table at TWO layers. Same host: an
         exclusive flock on ``<table>/_save.lock`` for the whole
@@ -369,7 +367,7 @@ class Catalog:
             token = self._acquire_lease(d, lease_ttl)
             try:
                 self._save_locked(
-                    table, d, num_partitions, layout, families, fence_token=token
+                    table, d, num_partitions, families, fence_token=token
                 )
             finally:
                 self._release_lease(d, token)
@@ -416,7 +414,6 @@ class Catalog:
         stops the other."""
         import socket
         import time
-        import uuid
 
         lease = self._lease_path(d)
         token = uuid.uuid4().hex
@@ -505,7 +502,6 @@ class Catalog:
         table: Table,
         d: str,
         num_partitions: int,
-        layout: str,
         families: Optional[List[FamilyDescriptor]],
         fence_token: Optional[str] = None,
     ) -> None:
@@ -558,7 +554,6 @@ class Catalog:
             table.rowkey_col,
             families=list(families or []),
             indices=desc_indices,
-            layout=layout,
             num_buckets=num_partitions,
             version=new_v,
             schemas=schemas,
@@ -575,60 +570,30 @@ class Catalog:
         suffix = ".staging." + (fence_token or uuid.uuid4().hex)
         promotions = []       # (final, staging) — promoted post-fence
         registrations = []    # deferred until after the descriptor commit
-        if layout == "bucketed":
-            qd = self._sql_name(table.name, "__data")
+        qd = self._sql_name(table.name, "__data")
+        self._write_bucketed(
+            table.df, data_path, qd, rk, [rk],
+            num_partitions, bloom_cols=bloom_cols, codec=codec, register=False,
+            staging_suffix=suffix, swap=False,
+        )
+        promotions.append((data_path, data_path + suffix))
+        registrations.append((qd, data_path, table.df.schema, [rk]))
+        for spec in table.indices.indices:
+            # bucket by rowkey (shuffle-free maintenance + semi-join
+            # application) but SORT by the indexed values: the
+            # planner's range probe then prunes row groups on the
+            # index key — losing only merge-join sortedness (a local
+            # Sort), never the Exchange.
+            qi = self._sql_name(table.name, f"__idx_{spec.name}")
+            ipath = os.path.join(index_root, spec.name)
+            idx_df = table.index_tables[spec.name]
             self._write_bucketed(
-                table.df, data_path, qd, rk, [rk],
-                num_partitions, bloom_cols=bloom_cols, codec=codec, register=False,
+                idx_df, ipath, qi, rk, spec.indexed_names + [rk],
+                num_partitions, codec=codec, register=False,
                 staging_suffix=suffix, swap=False,
             )
-            promotions.append((data_path, data_path + suffix))
-            registrations.append((qd, data_path, table.df.schema, [rk]))
-            for spec in table.indices.indices:
-                # bucket by rowkey (shuffle-free maintenance + semi-join
-                # application) but SORT by the indexed values: the
-                # planner's range probe then prunes row groups on the
-                # index key — losing only merge-join sortedness (a local
-                # Sort), never the Exchange.
-                qi = self._sql_name(table.name, f"__idx_{spec.name}")
-                ipath = os.path.join(index_root, spec.name)
-                idx_df = table.index_tables[spec.name]
-                self._write_bucketed(
-                    idx_df, ipath, qi, rk, spec.indexed_names + [rk],
-                    num_partitions, codec=codec, register=False,
-                    staging_suffix=suffix, swap=False,
-                )
-                promotions.append((ipath, ipath + suffix))
-                registrations.append((qi, ipath, idx_df.schema, spec.indexed_names + [rk]))
-        else:
-            w = (
-                table.df.repartitionByRange(num_partitions, rk)
-                .sortWithinPartitions(rk)
-                # parquet bloom filters: the HFile bloom analog
-                # (BloomFilterFactory.java:40) — point gets skip row
-                # groups whose bloom excludes the key even when min/max
-                # ranges overlap
-                .write.mode("overwrite")
-            )
-            for c in bloom_cols:
-                w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
-            if codec is not None:
-                w = w.option("compression", codec)
-            w.parquet(data_path + suffix)
-            promotions.append((data_path, data_path + suffix))
-            for spec in table.indices.indices:
-                idx = table.index_tables[spec.name]
-                sort_cols = spec.indexed_names + [rk]
-                iw = (
-                    idx.repartitionByRange(num_partitions, *sort_cols)
-                    .sortWithinPartitions(*sort_cols)
-                    .write.mode("overwrite")
-                )
-                if codec is not None:
-                    iw = iw.option("compression", codec)
-                ipath = os.path.join(index_root, spec.name)
-                iw.parquet(ipath + suffix)
-                promotions.append((ipath, ipath + suffix))
+            promotions.append((ipath, ipath + suffix))
+            registrations.append((qi, ipath, idx_df.schema, spec.indexed_names + [rk]))
         hook = getattr(self, "_pre_commit_hook", None)
         if hook is not None:
             hook()  # test seam: observe the catalog BEFORE the pointer swap
@@ -744,7 +709,7 @@ class Catalog:
 
     def load(self, name: str) -> Table:
         """Open a table: reads descriptor, attaches data + index scans
-        (lazy — nothing is read until a query runs). Bucketed tables are
+        (lazy — nothing is read until a query runs). Data and indexes are
         re-registered in the session catalog so Catalyst knows their
         hash partitioning and skips the Exchange in rowkey joins."""
         d = self._dir(name)
@@ -762,34 +727,21 @@ class Catalog:
             ddl = desc.schemas.get(key)
             return T.StructType.fromDDL(ddl) if ddl else None
 
-        if desc.layout == "bucketed":
-            df = self._attach_bucketed(
-                self._sql_name(name, "__data"), data_path, rk, [rk],
-                desc.num_buckets, schema=_schema("__data"),
-            )
-        else:
-            r = self.spark.read
-            sch = _schema("__data")
-            df = (r.schema(sch) if sch else r).parquet(data_path)
+        df = self._attach_bucketed(
+            self._sql_name(name, "__data"), data_path, rk, [rk],
+            desc.num_buckets, schema=_schema("__data"),
+        )
         t = Table(df, rk, name, desc.indices)
         t.families = list(desc.families)  # descriptor options ride along
         for spec in desc.indices.indices:
-            ipath = os.path.join(self._index_root(d, desc.version), spec.name)
-            if desc.layout == "bucketed":
-                t.index_tables[spec.name] = self._attach_bucketed(
-                    self._sql_name(name, f"__idx_{spec.name}"),
-                    ipath,
-                    rk,
-                    spec.indexed_names + [rk],
-                    desc.num_buckets,
-                    schema=_schema(spec.name),
-                )
-            else:
-                ri = self.spark.read
-                schi = _schema(spec.name)
-                t.index_tables[spec.name] = (
-                    ri.schema(schi) if schi else ri
-                ).parquet(ipath)
+            t.index_tables[spec.name] = self._attach_bucketed(
+                self._sql_name(name, f"__idx_{spec.name}"),
+                os.path.join(self._index_root(d, desc.version), spec.name),
+                rk,
+                spec.indexed_names + [rk],
+                desc.num_buckets,
+                schema=_schema(spec.name),
+            )
         return t
 
     def bucketed_sql_name(self, dir_name: str) -> str:
@@ -808,9 +760,11 @@ class Catalog:
         and aggregations on the rowkey then run WITHOUT a shuffle on
         this side — the analog of the reference's region colocation
         (SecIndexLoadBalancer keeps T and T_idx regions together so the
-        index semi-join is region-local). Prefer ``save()`` (bucketed by
-        default, descriptor-integrated); this variant writes under
-        ``<root>/<name>_bucketed`` and registers the ROOT-TAGGED session
+        index semi-join is region-local). The artifact stores (postings,
+        dedup state, rollups, ...) persist through it; a table with
+        indexes goes through ``save()`` (descriptor-integrated, versioned).
+        This variant writes ``table.df`` only, under
+        ``<root>/<name>_bucketed``, and registers the ROOT-TAGGED session
         name ``bucketed_sql_name("<name>_bucketed")``, sharing the same
         atomic staging + fresh-registration plumbing."""
         rk = table.rowkey_col
@@ -818,23 +772,6 @@ class Catalog:
         self._write_bucketed(
             table.df, os.path.join(self.root, name, "data"),
             self.bucketed_sql_name(name), rk, [rk], num_buckets,
-        )
-        for spec in table.indices.indices:
-            self._write_bucketed(
-                table.index_tables[spec.name],
-                os.path.join(self.root, name, "index", spec.name),
-                self.bucketed_sql_name(f"{table.name}_bucketed_idx_{spec.name}"),
-                rk,
-                [rk],
-                num_buckets,
-            )
-
-    def load_bucketed(self, name: str, rowkey_col: str) -> Table:
-        """Open a ``save_bucketed`` artifact by its directory name (the
-        plain ``<name>_bucketed``); resolves the root-tagged session
-        registration."""
-        return Table(
-            self.spark.table(self.bucketed_sql_name(name)), rowkey_col, name
         )
 
     def list_tables(self) -> List[str]:
@@ -854,13 +791,13 @@ class Catalog:
         snap.index_tables = t.index_tables
         d = self._dir(f"{name}@{snapshot_name}")
         os.makedirs(d, exist_ok=True)
-        # the snapshot's descriptor must carry the SOURCE's physical
-        # layout and family options — a default save here would make
+        # the snapshot's descriptor must carry the SOURCE's bucket count
+        # and family options — a default save here would make
         # restore_snapshot/clone_snapshot (which read the snapshot's
-        # descriptor) silently rewrite the table to bucketed/32 and
+        # descriptor) silently rewrite the table to 32 buckets and
         # drop every FamilyDescriptor (TTL, max_versions, bloom, codec)
         desc = self._load_desc(name)
-        self.save(snap, num_partitions=desc.num_buckets, layout=desc.layout,
+        self.save(snap, num_partitions=desc.num_buckets,
                   families=list(desc.families) or None)
 
     # -- admin DDL (HBaseAdmin surface + IndexMasterObserver cascades) ------
@@ -898,7 +835,7 @@ class Catalog:
         for spec in t.indices.indices:
             empty.create_index(spec)
         empty.families = t.families
-        self.save(empty, num_partitions=desc.num_buckets, layout=desc.layout,
+        self.save(empty, num_partitions=desc.num_buckets,
                   families=t.families or None)
 
     def clone_snapshot(self, snapshot: str, new_name: str) -> None:
@@ -908,7 +845,7 @@ class Catalog:
         clone = Table(s.df, s.rowkey_col, new_name, s.indices)
         clone.index_tables = dict(s.index_tables)
         desc = self._load_desc(snapshot)
-        self.save(clone, num_partitions=desc.num_buckets, layout=desc.layout,
+        self.save(clone, num_partitions=desc.num_buckets,
                   families=list(desc.families) or None)
 
     def restore_snapshot(self, name: str, snapshot_name: str) -> None:

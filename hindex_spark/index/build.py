@@ -58,31 +58,22 @@ def build_index(
 
 def maintain_index(
     index_df: DataFrame,
-    new_table_state: DataFrame,
     affected_rowkeys: DataFrame,
+    affected_state: DataFrame,
     spec: IndexSpecification,
     rowkey_col: str = "rowkey",
-    affected_state: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Incremental maintenance: remove index entries for affected rowkeys
     (the reference reads the old row to find entries to tombstone,
     doGetAndGroupByTS:288-328 — here an anti-join does it without the
     read), then add entries from the new state of those rows.
 
-    ``affected_state``: optional precomputed new state of EXACTLY the
-    affected rows (only the specs' source columns + rowkey are needed).
-    Without it, fresh entries come from semi-joining the full new table
-    state — which, when that state is a lazy merge plan, re-executes the
-    whole merge for the index side (a semi-join cannot push through a
-    full-outer join). Mutation verbs that already know the affected
-    rows' new values pass them directly; the index job is then a narrow
-    join bounded by the batch, not the table."""
+    ``affected_state``: the new state of EXACTLY the affected rows (only
+    the spec's source columns + rowkey are needed; deleted rows are
+    absent). The mutation verbs compute it bounded by the batch, so the
+    index job is a narrow join over the batch, never a re-execution of
+    the table-wide merge."""
     keys = affected_rowkeys.select(rowkey_col).distinct()
     kept = index_df.join(keys, rowkey_col, "left_anti")
-    src = (
-        affected_state
-        if affected_state is not None
-        else new_table_state.join(keys, rowkey_col, "left_semi")
-    )
-    fresh = build_index(src, spec, rowkey_col)
+    fresh = build_index(affected_state, spec, rowkey_col)
     return kept.unionByName(fresh)

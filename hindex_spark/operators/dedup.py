@@ -21,7 +21,6 @@ MERSENNE31; minhash_i = min((A[i]*h + B[i]) mod MERSENNE31).
 
 from __future__ import annotations
 
-import os
 from typing import List, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, Observation
@@ -50,12 +49,7 @@ def _spread_for_shingle(df: DataFrame, id_col: str) -> DataFrame:
     (measured 4x on the sf1 valve path: 14 s -> 3.4 s). The exchange
     moves only light (id, text) rows — the heavy unit arrays are built
     post-exchange, so the shuffle is cheap AND the shingle compute
-    spreads.
-
-    ``HINDEX_LSH_PRESHINGLE_REPART=0`` disables it (the measurement
-    knob the sf1 A/B adjudication toggles in-process)."""
-    if os.environ.get("HINDEX_LSH_PRESHINGLE_REPART", "1") == "0":
-        return df
+    spreads."""
     npart = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return df.repartition(npart, id_col)
 

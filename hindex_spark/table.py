@@ -20,14 +20,14 @@ MVCC.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any, Dict, List, Optional, Sequence, Tuple
+from dataclasses import dataclass
+from typing import Any, Dict, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hindex_spark import cells as cell_mod
-from hindex_spark.filters import Filter, NON_INDEXABLE
+from hindex_spark.filters import Filter
 from hindex_spark.index.build import build_index, maintain_index
 from hindex_spark.index.planner import IndexPlan, ScanFilterEvaluator
 from hindex_spark.index.spec import IndexSpecification, TableIndices
@@ -406,62 +406,42 @@ class Table:
         self,
         df: DataFrame,
         affected: DataFrame,
+        affected_state: Optional[DataFrame],
         op: str = "put",
         change: DataFrame = None,
-        affected_state: DataFrame = None,
     ) -> "Table":
+        """``affected_state``: the new state of exactly the ``affected``
+        rows (deleted rows absent), bounded by the batch — the input of
+        every index's maintenance and, for column deletes and computed
+        mutations, the changelog after-image. None only when the table
+        has no index and no changelog needs it."""
         out = Table(df, self.rowkey_col, self.name, self.indices)
         # Same-job index maintenance (IndexRegionObserver.preBatchMutate).
         out.index_tables = {
-            name: maintain_index(
-                idx, df, affected, spec, self.rowkey_col, affected_state=affected_state
+            s.name: maintain_index(
+                self.index_tables[s.name], affected, affected_state, s, self.rowkey_col
             )
-            for name, idx, spec in (
-                (s.name, self.index_tables[s.name], s) for s in self.indices.indices
-            )
+            for s in self.indices.indices
         }
         out._changelog = self._changelog
         if self._changelog is not None:
             rk = self.rowkey_col
-            if op == "delete":
+            if op in ("delete", "replace"):
                 self._changelog.emit("delete", affected.select(rk), self.df, rk)
-            elif op == "replace":
-                # Column/family deletes CLEAR cells, which a put record
-                # cannot express (replay treats NULL as keep-old). Ship
-                # them as delete(keys) + put(full after-image of the
-                # surviving rows): the peer drops the row then rebuilds
-                # it from nothing, so cleared columns come back NULL and
-                # vanished rows stay gone. Two seq-ordered records per
-                # batch, cost still proportional to the batch.
-                self._changelog.emit("delete", affected.select(rk), self.df, rk)
-                if affected_state is not None and set(affected_state.columns) == set(
-                    self.df.columns
-                ):
-                    after = affected_state  # batch-bounded, no merge re-probe
-                else:
-                    after = df.join(affected.select(rk), rk, "left_semi")
-                self._changelog.emit("put", after, self.df, rk)
-            elif change is not None:
-                # WAL-faithful DELTA: exactly the cells the mutation
-                # carried (a Put's WAL edit) — zero table reads, so the
-                # emit cost is proportional to the batch at any scale.
-                # Replay treats NULL as keep-old, same as Put semantics.
-                self._changelog.emit("put", change, self.df, rk)
-            else:
-                # Computed mutations (increment/append): ship the CDC
-                # after-image of the touched rows, analogous to their
-                # WAL carrying the computed new cell values. A
-                # full-width affected_state IS that after-image, already
-                # bounded by the batch; otherwise probe the merge with a
-                # semi-join (which re-executes it — the verbs that can
-                # pass affected_state do).
-                if affected_state is not None and set(affected_state.columns) == set(
-                    self.df.columns
-                ):
-                    after = affected_state
-                else:
-                    after = df.join(affected.select(rk), rk, "left_semi")
-                self._changelog.emit("put", after, self.df, rk)
+            if op != "delete":
+                # A put ships its WAL-faithful DELTA (exactly the cells
+                # it carried; replay treats NULL as keep-old). Column
+                # deletes ("replace") CLEAR cells, which a put record
+                # cannot express, so they ship delete(keys) above plus
+                # the full after-image of the surviving rows: the peer
+                # drops the row then rebuilds it, cleared columns come
+                # back NULL and vanished rows stay gone. Computed
+                # mutations (increment/append) ship the after-image too,
+                # as their WAL carries the computed cell values. Either
+                # way the emit cost is proportional to the batch.
+                self._changelog.emit(
+                    "put", change if change is not None else affected_state, self.df, rk
+                )
         # Weight the auto-truncation counter by the index tables the
         # verb re-derived: ONE put against a 3-index table builds 4
         # merge plans, and a downstream query fanning out over the
@@ -508,12 +488,7 @@ class Table:
                 f"alias as order_col to both order by it and write it"
             )
         put_cols = [c for c in puts.columns if c != rk and c != order_col]
-        unknown = [c for c in put_cols if c not in self.df.columns]
-        if unknown:
-            raise ValueError(
-                f"put columns not in table {self.name!r}: {unknown} "
-                f"(table columns: {self.df.columns})"
-            )
+        self._check_columns(put_cols, "put")
         # Collapse multi-puts on the same key: per column, the value from
         # the latest batch row where it was non-null. max_by skips rows
         # whose ordering key is NULL, so masking the seq with "value is
@@ -545,80 +520,77 @@ class Table:
                 for c in put_cols
             ]
         )
-        old = self.df.alias("o")
-        new = puts1.alias("n")
-        joined = old.join(new, F.col(f"o.{rk}") == F.col(f"n.{rk}"), "full_outer")
-        out_cols = [
-            F.coalesce(F.col(f"o.{rk}"), F.col(f"n.{rk}")).alias(rk)
-        ]
+        return self._merge(
+            puts1, put_cols, lambda c: F.coalesce(F.col(f"n.{c}"), F.col(f"o.{c}")),
+            change=puts1,
+        )
+
+    def _check_columns(self, cols, verb: str) -> None:
+        unknown = [c for c in cols if c not in self.df.columns]
+        if unknown:
+            raise ValueError(
+                f"{verb} columns not in table {self.name!r}: {unknown} "
+                f"(table columns: {self.df.columns})"
+            )
+
+    def _merge(
+        self, batch: DataFrame, batch_cols, value, change: DataFrame = None
+    ) -> "Table":
+        """The shared put/increment/append merge. ``batch`` is the verb's
+        batch collapsed to one row per rowkey; ``value(c)`` is the verb's
+        new value of column ``c`` over the "o" (old row) / "n" (batch
+        row) aliases. Touched rows take ``value(c)`` for every batch
+        column, everything else keeps its old value verbatim (an
+        increment of an untouched row must not turn its NULL into 0).
+
+        Index maintenance gets the new state of exactly the touched
+        rows, computed apart from the table-wide merge: a semi-join
+        cannot push through a full-outer join, so deriving it from the
+        merged table would re-execute the whole merge per index. The old
+        side is a COLUMN-PRUNED scan semi-joined down to the batch keys
+        (broadcast at any table size — keys are the batch), merged with
+        the batch by the same ``value`` — every row there is touched by
+        construction. Its columns are the ones any index derives from,
+        so a partial put still re-derives multi-column index rows from
+        the surviving old values (idxtab_partial_put semantics,
+        IndexUtils.prepareIndexPut:269-330); when a changelog needs the
+        after-image of a computed mutation (no ``change`` delta) it
+        spans every column, and each index build prunes back down."""
+        rk = self.rowkey_col
+        on = F.col(f"o.{rk}") == F.col(f"n.{rk}")
+        touched = F.col(f"n.{rk}").isNotNull()
+        joined = self.df.alias("o").join(batch.alias("n"), on, "full_outer")
+        out_cols = [F.coalesce(F.col(f"o.{rk}"), F.col(f"n.{rk}")).alias(rk)]
         for c in self.df.columns:
             if c == rk:
                 continue
-            if c in put_cols:
-                out_cols.append(F.coalesce(F.col(f"n.{c}"), F.col(f"o.{c}")).alias(c))
+            if c in batch_cols:
+                out_cols.append(
+                    F.when(touched, value(c)).otherwise(F.col(f"o.{c}")).alias(c)
+                )
             else:
                 out_cols.append(F.col(f"o.{c}").alias(c))
-        return self._with_new_df(
-            joined.select(*out_cols),
-            puts1.select(rk),
-            change=puts1,
-            affected_state=self._put_affected_state(puts1, put_cols),
-        )
 
-    def _narrow_affected_state(
-        self, batch_agg: DataFrame, batch_cols, value_expr, columns=None
-    ) -> Optional[DataFrame]:
-        """New state of exactly the batch-affected rows, restricted to
-        the columns any index derives from — the narrow input
-        maintain_index needs. Without this, the index's fresh-entry
-        build semi-joined the full merged table state, re-executing the
-        whole full-outer merge for the index side of every mutation (a
-        semi-join cannot push through a full-outer join). Here the old
-        side is a COLUMN-PRUNED scan semi-joined down to the batch keys
-        (broadcast at any table size — keys are the batch), merged with
-        the collapsed batch by ``value_expr(c)`` — the verb's own merge
-        rule over the "o"/"n" aliases. Every row of the narrow frame is
-        batch-touched by construction, so verbs whose full merge guards
-        on touched-ness pass the unguarded arithmetic. A partial put
-        still re-derives multi-column index rows from the surviving old
-        values (idxtab_partial_put semantics,
-        IndexUtils.prepareIndexPut:269-330).
-
-        ``columns``: explicit column set instead of the index-derived
-        one — pass the full value-column list to get a CDC after-image
-        of the affected rows (the changelog emit for computed
-        mutations); Catalyst prunes unused columns when the same frame
-        feeds the narrower index build."""
-        rk = self.rowkey_col
-        if columns is not None:
-            needed = [c for c in columns if c != rk]
+        needed = None
+        if self._changelog is not None and change is None:
+            needed = [c for c in self.df.columns if c != rk]
         elif self.indices.indices:
             needed = sorted(
                 {q.column for s in self.indices.indices for q in s.columns} - {rk}
             )
-        else:
-            return None
-        keys = batch_agg.select(rk)
-        old_n = (
-            self.df.select(rk, *needed).join(keys, rk, "left_semi").alias("o")
-        )
-        new_n = batch_agg.select(
-            rk, *[c for c in needed if c in batch_cols]
-        ).alias("n")
-        joined = old_n.join(new_n, F.col(f"o.{rk}") == F.col(f"n.{rk}"), "full_outer")
-        cols = [F.coalesce(F.col(f"o.{rk}"), F.col(f"n.{rk}")).alias(rk)]
-        for c in needed:
-            if c in batch_cols:
-                cols.append(value_expr(c).alias(c))
-            else:
-                cols.append(F.col(f"o.{c}").alias(c))
-        return joined.select(*cols)
-
-    def _put_affected_state(self, puts1: DataFrame, put_cols) -> Optional[DataFrame]:
-        return self._narrow_affected_state(
-            puts1,
-            put_cols,
-            lambda c: F.coalesce(F.col(f"n.{c}"), F.col(f"o.{c}")),
+        state = None
+        if needed is not None:
+            old_n = self.df.select(rk, *needed).join(batch.select(rk), rk, "left_semi")
+            new_n = batch.select(rk, *[c for c in needed if c in batch_cols])
+            state = old_n.alias("o").join(new_n.alias("n"), on, "full_outer").select(
+                F.coalesce(F.col(f"o.{rk}"), F.col(f"n.{rk}")).alias(rk),
+                *[
+                    (value(c) if c in batch_cols else F.col(f"o.{c}")).alias(c)
+                    for c in needed
+                ],
+            )
+        return self._with_new_df(
+            joined.select(*out_cols), batch.select(rk), state, change=change
         )
 
     def delete(self, rowkeys: DataFrame) -> "Table":
@@ -632,10 +604,8 @@ class Table:
             self.df.filter(F.lit(False)) if self.indices.indices else None
         )
         return self._with_new_df(
-            self.df.join(keys, self.rowkey_col, "left_anti"),
-            keys,
+            self.df.join(keys, self.rowkey_col, "left_anti"), keys, empty_state,
             op="delete",
-            affected_state=empty_state,
         )
 
     def delete_where(self, predicate: Column) -> "Table":
@@ -706,9 +676,7 @@ class Table:
             if c not in cols:
                 aff_survives = aff_survives | F.col(c).isNotNull()
         aff_state = aff.filter(aff_survives).select(*aff_cols)
-        return self._with_new_df(
-            new_df, keys, op="replace", affected_state=aff_state
-        )
+        return self._with_new_df(new_df, keys, aff_state, op="replace")
 
     def delete_family(self, rowkeys: DataFrame, family: str) -> "Table":
         """Family-level delete (Delete.addFamily, Delete.java:142): clear
@@ -729,51 +697,13 @@ class Table:
         Creates the row if absent (reference semantics)."""
         rk = self.rowkey_col
         delta_cols = [c for c in increments.columns if c != rk]
-        unknown = [c for c in delta_cols if c not in self.df.columns]
-        if unknown:
-            raise ValueError(
-                f"increment columns not in table {self.name!r}: {unknown} "
-                f"(table columns: {self.df.columns})"
-            )
+        self._check_columns(delta_cols, "increment")
         incs = increments.groupBy(rk).agg(*[F.sum(c).alias(c) for c in delta_cols])
-        old = self.df.alias("o")
-        new = incs.alias("n")
-        joined = old.join(new, F.col(f"o.{rk}") == F.col(f"n.{rk}"), "full_outer")
-        touched = F.col(f"n.{rk}").isNotNull()
-        out_cols = [F.coalesce(F.col(f"o.{rk}"), F.col(f"n.{rk}")).alias(rk)]
-        for c in self.df.columns:
-            if c == rk:
-                continue
-            if c in delta_cols:
-                # only rows in the batch get the coalesce-to-0 arithmetic;
-                # untouched rows keep their value (incl. NULL) verbatim
-                out_cols.append(
-                    F.when(
-                        touched,
-                        F.coalesce(F.col(f"o.{c}"), F.lit(0))
-                        + F.coalesce(F.col(f"n.{c}"), F.lit(0)),
-                    )
-                    .otherwise(F.col(f"o.{c}"))
-                    .alias(c)
-                )
-            else:
-                out_cols.append(F.col(f"o.{c}").alias(c))
-        # full-width when a changelog needs the CDC after-image; the
-        # index build prunes back down to its own columns either way
-        state_cols = (
-            list(self.df.columns) if self._changelog is not None else None
-        )
-        return self._with_new_df(
-            joined.select(*out_cols),
-            incs.select(rk),
-            affected_state=self._narrow_affected_state(
-                incs,
-                delta_cols,
-                # every narrow-frame row is batch-touched: unguarded add
-                lambda c: F.coalesce(F.col(f"o.{c}"), F.lit(0))
-                + F.coalesce(F.col(f"n.{c}"), F.lit(0)),
-                columns=state_cols,
-            ),
+        return self._merge(
+            incs,
+            delta_cols,
+            lambda c: F.coalesce(F.col(f"o.{c}"), F.lit(0))
+            + F.coalesce(F.col(f"n.{c}"), F.lit(0)),
         )
 
     def append(self, appends: DataFrame) -> "Table":
@@ -781,51 +711,16 @@ class Table:
         string concat of old value and appended suffix."""
         rk = self.rowkey_col
         app_cols = [c for c in appends.columns if c != rk]
-        unknown = [c for c in app_cols if c not in self.df.columns]
-        if unknown:
-            raise ValueError(
-                f"append columns not in table {self.name!r}: {unknown} "
-                f"(table columns: {self.df.columns})"
-            )
+        self._check_columns(app_cols, "append")
         apps = appends.groupBy(rk).agg(
             *[F.concat_ws("", F.collect_list(c)).alias(c) for c in app_cols]
         )
-        old = self.df.alias("o")
-        new = apps.alias("n")
-        joined = old.join(new, F.col(f"o.{rk}") == F.col(f"n.{rk}"), "full_outer")
-        touched = F.col(f"n.{rk}").isNotNull()
-        out_cols = [F.coalesce(F.col(f"o.{rk}"), F.col(f"n.{rk}")).alias(rk)]
-        for c in self.df.columns:
-            if c == rk:
-                continue
-            if c in app_cols:
-                out_cols.append(
-                    F.when(
-                        touched,
-                        F.concat(
-                            F.coalesce(F.col(f"o.{c}"), F.lit("")),
-                            F.coalesce(F.col(f"n.{c}"), F.lit("")),
-                        ),
-                    )
-                    .otherwise(F.col(f"o.{c}"))
-                    .alias(c)
-                )
-            else:
-                out_cols.append(F.col(f"o.{c}").alias(c))
-        state_cols = (
-            list(self.df.columns) if self._changelog is not None else None
-        )
-        return self._with_new_df(
-            joined.select(*out_cols),
-            apps.select(rk),
-            affected_state=self._narrow_affected_state(
-                apps,
-                app_cols,
-                lambda c: F.concat(
-                    F.coalesce(F.col(f"o.{c}"), F.lit("")),
-                    F.coalesce(F.col(f"n.{c}"), F.lit("")),
-                ),
-                columns=state_cols,
+        return self._merge(
+            apps,
+            app_cols,
+            lambda c: F.concat(
+                F.coalesce(F.col(f"o.{c}"), F.lit("")),
+                F.coalesce(F.col(f"n.{c}"), F.lit("")),
             ),
         )
 
@@ -913,12 +808,7 @@ class Table:
         matching the all-or-nothing of one Spark job)."""
         rk = self.rowkey_col
         value_cols = [c for c in ops.columns if c not in (rk, "op")]
-        unknown = [c for c in value_cols if c not in self.df.columns]
-        if unknown:
-            raise ValueError(
-                f"batch columns not in table {self.name!r}: {unknown} "
-                f"(table columns: {self.df.columns})"
-            )
+        self._check_columns(value_cols, "batch")
         # ONE job validates op kinds and answers both emptiness checks
         # (three separate isEmpty() actions would recompute ops' upstream
         # plan three times)

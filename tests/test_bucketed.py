@@ -14,10 +14,11 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
         cat = Catalog(spark, str(tmp_path / "wh"))
         t = Table.from_parquet(spark, f"{sf_dir}/orders.parquet", "o_orderkey", "orders")
         t.create_index(IndexSpecification("idx_cust").add_column("o_custkey", "Long"))
-        cat.save_bucketed(t, num_buckets=8)
+        cat.save(t, num_partitions=8)
 
-        data = spark.table(cat.bucketed_sql_name("orders_bucketed"))
-        idx = spark.table(cat.bucketed_sql_name("orders_bucketed_idx_idx_cust"))
+        t2 = cat.load("orders")
+        data = t2.df
+        idx = t2.index_tables["idx_cust"]
         keys = idx.filter(F.col("o_custkey") == 85).select("o_orderkey")
         joined = data.join(keys, "o_orderkey", "left_semi")
         plan = joined._jdf.queryExecution().executedPlan().toString()
@@ -40,12 +41,12 @@ def test_exists_batch_zero_table_side_exchange_on_bucketed(spark, sf_dir, tmp_pa
     import re
 
     cat = Catalog(spark, str(tmp_path / "wh"))
-    cat.save_bucketed(
+    cat.save(
         Table.from_parquet(spark, f"{sf_dir}/orders.parquet", "o_orderkey", "oexb"),
-        num_buckets=8,
+        num_partitions=8,
     )
     try:
-        bt = cat.load_bucketed("oexb_bucketed", "o_orderkey")
+        bt = cat.load("oexb")
         probes = spark.createDataFrame([(1,), (2,), (999999999,)], "o_orderkey long")
         out = bt.exists_batch(probes)
         p = out._jdf.queryExecution().executedPlan().toString()

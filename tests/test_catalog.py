@@ -49,16 +49,6 @@ def test_sorted_layout_prunes(spark, sf_dir, tmp_path):
     assert "PushedFilters" in plan  # min/max stats + pushdown do the pruning
 
 
-def test_range_layout_still_available(spark, sf_dir, tmp_path):
-    cat = Catalog(spark, str(tmp_path / "whr"))
-    t = Table.from_parquet(spark, f"{sf_dir}/orders.parquet", "o_orderkey", "orders")
-    cat.save(t, num_partitions=8, layout="range")
-    t2 = cat.load("orders")
-    assert t2.df.count() == t.df.count()
-    plan = t2.get(5)._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan
-
-
 def test_bucketed_put_no_exchange_on_table_side(spark, sf_dir, tmp_path):
     """The mutation-scale invariant: a put batch against a cataloged
     (bucketed) table must not reshuffle the stored table — only the
@@ -334,16 +324,16 @@ def test_crash_between_staging_write_and_swap_is_recoverable(spark, sf_dir, tmp_
     assert _index_consistent(now)
 
 
-def test_crash_mid_write_range_layout_is_recoverable(spark, sf_dir, tmp_path):
-    """Range layout writes version dirs directly (no staging): a crash
-    mid-write leaves a PARTIAL uncommitted version dir. The descriptor
-    never references it, and the next save's mode('overwrite') replaces
-    it wholesale."""
+def test_crash_leaving_partial_version_dirs_is_recoverable(spark, sf_dir, tmp_path):
+    """A save killed mid-write can leave a PARTIAL uncommitted version
+    dir at the next version's paths. The descriptor never references
+    it, and the next save's promotion of its staging replaces it
+    wholesale."""
     base = spark.read.parquet(f"{sf_dir}/region.parquet")
     t = Table(base, "r_regionkey", "region_crash")
     t.create_index(IndexSpecification("idx_n").add_column("r_name", "String"))
     cat = Catalog(spark, str(tmp_path))
-    cat.save(t, num_partitions=1, layout="range")  # v0
+    cat.save(t, num_partitions=1)  # v0
     d = str(tmp_path / "region_crash")
     # simulate a save killed mid-write: partial junk at the v1 paths
     os.makedirs(f"{d}/data_v1", exist_ok=True)
@@ -353,7 +343,7 @@ def test_crash_mid_write_range_layout_is_recoverable(spark, sf_dir, tmp_path):
     # readers stay on v0 (descriptor pointer)
     assert cat.load("region_crash").df.count() == base.count()
     # next save overwrites the partial dirs and commits v1 cleanly
-    cat.save(cat.load("region_crash"), num_partitions=1, layout="range")
+    cat.save(cat.load("region_crash"), num_partitions=1)
     got = cat.load("region_crash")
     assert got.df.count() == base.count()
     via_idx = {r["r_regionkey"] for r in got.index_tables["idx_n"].collect()}
@@ -573,11 +563,11 @@ def test_load_mutate_resave_reload_index_stays_consistent(spark, sf_dir, tmp_pat
 
 
 def test_snapshot_preserves_layout_and_families(spark, sf_dir, tmp_path):
-    """The snapshot's descriptor must carry the SOURCE table's physical
-    layout and family options: restore/clone read the snapshot's
-    descriptor, so a defaulted snapshot save silently rewrote a range
-    table to bucketed/32 and dropped every FamilyDescriptor (TTL,
-    max_versions, bloom, codec) on restore."""
+    """The snapshot's descriptor must carry the SOURCE table's bucket
+    count and family options: restore/clone read the snapshot's
+    descriptor, so a defaulted snapshot save silently rewrote the table
+    to 32 buckets and dropped every FamilyDescriptor (TTL, max_versions,
+    bloom, codec) on restore."""
     from hindex_spark.catalog import FamilyDescriptor
 
     cat = Catalog(spark, str(tmp_path / "whsl"))
@@ -586,11 +576,11 @@ def test_snapshot_preserves_layout_and_families(spark, sf_dir, tmp_path):
     )
     t = Table(df, "r_regionkey", "reg_snap")
     fams = [FamilyDescriptor("d", ttl=3600, max_versions=3, compression="zstd")]
-    cat.save(t, num_partitions=2, layout="range", families=fams)
+    cat.save(t, num_partitions=2, families=fams)
     cat.snapshot("reg_snap", "s1")
 
     sdesc = cat._load_desc("reg_snap@s1")
-    assert sdesc.layout == "range"
+    assert sdesc.num_buckets == 2
     assert [f.name for f in sdesc.families] == ["d"]
     assert sdesc.families[0].ttl == 3600
     assert sdesc.families[0].max_versions == 3
@@ -599,7 +589,7 @@ def test_snapshot_preserves_layout_and_families(spark, sf_dir, tmp_path):
     # restore round-trips the physical descriptor, not just the rows
     cat.restore_snapshot("reg_snap", "s1")
     rdesc = cat._load_desc("reg_snap")
-    assert rdesc.layout == "range"
+    assert rdesc.num_buckets == 2
     assert [(f.name, f.ttl, f.max_versions) for f in rdesc.families] == [("d", 3600, 3)]
 
 

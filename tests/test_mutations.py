@@ -93,11 +93,20 @@ def test_mutate_row_atomic_batch(spark):
 
 def test_index_never_lags_table_through_mutation_sequence(spark):
     # TestAcidGuaranteesForIndex analog for the batch-snapshot model:
-    # after EVERY mutation, index content == projection of table content
+    # after EVERY mutation, each index's content == the projection of
+    # table content it derives from — a one-column index and a
+    # two-column index (entries exist while the LEADING column is
+    # non-null; a partial put must re-derive them from the surviving
+    # old value of the other column).
     from hindex_spark.index.spec import IndexSpecification
 
     t = _tab(spark)
     t.create_index(IndexSpecification("idx_cnt").add_column("c_cnt", "Int"))
+    t.create_index(
+        IndexSpecification("idx_str_app")
+        .add_column("c_str", "String", 8)
+        .add_column("c_app", "String", 8)
+    )
 
     def check(tab):
         idx = {(r["c_cnt"], r["rowkey"]) for r in tab.index_tables["idx_cnt"].collect()}
@@ -106,10 +115,37 @@ def test_index_never_lags_table_through_mutation_sequence(spark):
             for r in tab.df.filter(F.col("c_cnt").isNotNull()).collect()
         }
         assert idx == tbl
+        idx2 = {
+            (r["c_str"], r["c_app"], r["rowkey"])
+            for r in tab.index_tables["idx_str_app"].collect()
+        }
+        tbl2 = {
+            (r["c_str"], r["c_app"], r["rowkey"])
+            for r in tab.df.filter(F.col("c_str").isNotNull()).collect()
+        }
+        assert idx2 == tbl2
 
     t = t.put(spark.createDataFrame([("r1", 11)], ["rowkey", "c_cnt"]))
     check(t)
+    # partial put of the leading column only: r3's entry appears, built
+    # from the batch's c_str and r3's surviving old c_app
+    t = t.put(spark.createDataFrame([("r3", "a3")], ["rowkey", "c_str"]))
+    check(t)
+    assert _row(t, "r3")["c_app"] == "s3"
     t = t.increment(spark.createDataFrame([("r2", 100)], ["rowkey", "c_cnt"]))
+    check(t)
+    # append to the trailing column: existing rows re-derive their
+    # entry; r9 is created with a NULL leading column (no entry)
+    t = t.append(
+        spark.createDataFrame([("r1", "+x"), ("r9", "new")], ["rowkey", "c_app"])
+    )
+    check(t)
+    assert _row(t, "r1")["c_app"] == "s1+x"
+    # clearing the leading column drops the row's two-column entry;
+    # clearing the trailing one re-derives it with a NULL c_app
+    t = t.delete_columns(spark.createDataFrame([("r2",)], ["rowkey"]), ["c_str"])
+    check(t)
+    t = t.delete_columns(spark.createDataFrame([("r3",)], ["rowkey"]), ["c_app"])
     check(t)
     t = t.delete(spark.createDataFrame([("r3",)], ["rowkey"]))
     check(t)
