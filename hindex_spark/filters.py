@@ -246,10 +246,15 @@ def _resolve(table, column: str) -> Column:
     return F.col(column)
 
 
-def _rowkey(table) -> Column:
+def _rowkey_name(table) -> str:
+    """The table's rowkey column name; ``"rowkey"`` on the cell layer."""
     if table is not None and hasattr(table, "rowkey_col"):
-        return F.col(table.rowkey_col)
-    return F.col("rowkey")
+        return table.rowkey_col
+    return "rowkey"
+
+
+def _rowkey(table) -> Column:
+    return F.col(_rowkey_name(table))
 
 
 # ---------------------------------------------------------------------------
@@ -314,12 +319,7 @@ class SingleColumnValueExcludeFilter(SingleColumnValueFilter):
 
     def apply(self, df: DataFrame, table) -> DataFrame:
         out = df.filter(self.predicate(table))
-        name = (
-            table.physical_name(self.column)
-            if table is not None and hasattr(table, "physical_name")
-            else self.column
-        )
-        return out.drop(name)
+        return out.drop(self.column)
 
 
 @dataclass
@@ -514,7 +514,7 @@ class PageFilter(Filter):
         ``page_size`` distinct rowkeys satisfying ``pred``' in scan
         direction (distinct: on the cell layer a row is all its cells;
         the reference counts ROWS, not cells)."""
-        key = table.rowkey_col if table is not None and hasattr(table, "rowkey_col") else "rowkey"
+        key = _rowkey_name(table)
         h = f"__pg_{tag}"
         keyed = df.filter(pred).select(key).distinct()
         if self.reverse:
@@ -545,7 +545,7 @@ class KeyOnlyFilter(Filter):
     """KeyOnlyFilter.java — strip values, keep keys."""
 
     def apply(self, df: DataFrame, table) -> DataFrame:
-        key = table.rowkey_col if table is not None and hasattr(table, "rowkey_col") else "rowkey"
+        key = _rowkey_name(table)
         return df.select(key)
 
     def predicate(self, table) -> Column:
@@ -558,7 +558,7 @@ class FirstKeyOnlyFilter(Filter):
     counting. Wide-layer analog: distinct rowkeys."""
 
     def apply(self, df: DataFrame, table) -> DataFrame:
-        key = table.rowkey_col if table is not None and hasattr(table, "rowkey_col") else "rowkey"
+        key = _rowkey_name(table)
         return df.select(key).distinct()
 
     def predicate(self, table) -> Column:
@@ -581,7 +581,7 @@ class FirstKeyValueMatchingQualifiersFilter(FirstKeyOnlyFilter):
         if "qualifier" in df.columns:  # cell layer
             key = "rowkey"
             return df.filter(F.col("qualifier").isin(list(self.qualifiers))).select(key).distinct()
-        key = table.rowkey_col if table is not None and hasattr(table, "rowkey_col") else "rowkey"
+        key = _rowkey_name(table)
         present = [c for c in self.qualifiers if c in df.columns]
         if not present:
             return df.select(key).filter(F.lit(False))
@@ -633,7 +633,7 @@ class WhileMatchFilter(Filter):
         failing keys plus a broadcast range filter — fully parallel (a
         running-min window would serialize the table through one
         partition at scale)."""
-        key = table.rowkey_col if table is not None and hasattr(table, "rowkey_col") else "rowkey"
+        key = _rowkey_name(table)
         h = f"__ff_{tag}"
         agg = F.max(key) if self.reverse else F.min(key)
         first_fail = df.filter(pred & ~self.inner.predicate(table)).agg(agg.alias(h))

@@ -7,7 +7,7 @@ must not rescan (or worse, re-cluster) the corpus. ``AnnIndex`` is the
 catalog artifact that removes both costs — the inverted-file layout of
 Jégou et al. (Product Quantization for Nearest Neighbor Search, IEEE
 TPAMI 2011, §IV) expressed in this engine's artifact pattern
-(DedupState / SearchIndex / RollupStore):
+(operators/artifact.py):
 
 - **Train + assign once.** ``build()`` runs the bounded-sample k-means
   and the single full-corpus assignment, then persists the vectors
@@ -36,19 +36,18 @@ it against the same DuckDB brute-force SQL as the in-memory IVF gate.
 Concurrency: every mutation (build's save, update, compact) runs under
 the catalog writer lease (same-host flock + cross-host TTL lease with
 fence token), and the bucketed registration self-repairs on a fresh
-SparkSession from the persisted meta (tableExists, never a resolve —
-see SearchIndex.update for the file-listing-cache hazard).
+SparkSession from the persisted meta (operators/artifact.py).
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hindex_spark.operators.artifact import KeyedStore, clear_tombstones
 from hindex_spark.operators.dedup import cosine_expr
 from hindex_spark.operators.similarity import ivf_build, ivf_topk
 
@@ -108,7 +107,7 @@ def _train_residual_codebooks(embeddings, centroids, id_col, vec_col,
     return _pq_kmeans(X, m, k, iters)
 
 
-class AnnIndex:
+class AnnIndex(KeyedStore):
     """Handle to a persisted IVF index inside a ``Catalog``.
 
     Lifecycle::
@@ -118,44 +117,39 @@ class AnnIndex:
         hits = ix.topk(queries_df, k=10, nprobe=2)
         ix.update(new_vectors)          # frozen-centroid append
         ix = AnnIndex.open(cat, "docs")   # next session / next day
+
+    A re-embedded vector typically CHANGES cluster, so its old row
+    lives in a different bucket than the new one — replacement
+    (``upsert``) must be a tombstone cut, not an in-place rewrite.
     """
 
-    def __init__(self, catalog, name: str, id_col: str, vec_col: str,
-                 n_clusters: int, num_buckets: int = 32, cur_gen: int = 0,
-                 pq_codebooks=None, pq_residual: bool = False):
-        self.catalog = catalog
-        self.name = name
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.n_clusters = n_clusters
-        self.num_buckets = num_buckets
-        self.cur_gen = cur_gen
+    kind = "annindex"
+    bucket_col = "cluster"
+
+    def _meta(self) -> dict:
+        return {**super()._meta(), "vec_col": self.vec_col,
+                "n_clusters": self.n_clusters,
+                "pq_codebooks": self.pq_codebooks,
+                "pq_residual": self.pq_residual}
+
+    def _load_meta(self, m: dict) -> None:
+        super()._load_meta(m)
+        self.vec_col = m["vec_col"]
+        self.n_clusters = m["n_clusters"]
         # IVF-PQ: [m][k][dim/m] floats or None. Part of the artifact's
         # identity (codes are only decodable against their codebooks),
         # so it persists in the meta — bounded driver-material by
         # construction (m*k sub-centroids, the classic PQ codebook).
-        self.pq_codebooks = pq_codebooks
+        self.pq_codebooks = m.get("pq_codebooks")
         # True = codes encode RESIDUALS (vec - centroid), the IVFADC of
         # Jegou et al. §IV.B. On real embedding distributions residual
         # quantization is finer (residual magnitudes shrink with good
         # clustering); on this repo's synthetic copies it measured
         # recall-neutral (COVERAGE's crossover table), so raw encoding
         # stays the default and residual is the documented option.
-        # Part of the artifact identity (meta-persisted).
-        self.pq_residual = pq_residual
-        self.table_name = f"{name}_annindex_bucketed"
-
-    @property
-    def sql_name(self) -> str:
-        """Root-tagged session registration name (``table_name`` is the
-        catalog-root-relative directory; session SQL names are global —
-        Catalog.bucketed_sql_name)."""
-        return self.catalog.bucketed_sql_name(self.table_name)
+        self.pq_residual = m.get("pq_residual", False)
 
     # -- storage ------------------------------------------------------------
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.catalog.root, f"{self.name}_annindex_meta.json")
 
     def _centroid_path(self) -> str:
         return os.path.join(self.catalog.root, f"{self.name}_annindex_centroids")
@@ -182,7 +176,6 @@ class AnnIndex:
         by ~dim*4/(m+8) on top of the cluster pruning. The exact
         re-rank reads vectors for shortlisted ids only."""
         from hindex_spark.operators.similarity import pq_train
-        from hindex_spark.table import Table
 
         if num_buckets is None:
             num_buckets = n_clusters
@@ -204,20 +197,18 @@ class AnnIndex:
                     vec_col=vec_col, sample_size=pq_sample_size,
                     iters=pq_iters,
                 )
-        ix = cls(catalog, name, id_col, vec_col, n_clusters,
-                 num_buckets=num_buckets, pq_codebooks=codebooks,
-                 pq_residual=bool(pq_residual and pq_m is not None))
+        ix = cls(catalog, name, {
+            "id_col": id_col, "vec_col": vec_col, "n_clusters": n_clusters,
+            "num_buckets": num_buckets, "cur_gen": 0,
+            "pq_codebooks": codebooks,
+            "pq_residual": bool(pq_residual and pq_m is not None),
+        })
         rows = assigned.select("cluster", id_col, vec_col)
         if codebooks is not None:
             rows = ix._with_pq_cols(rows, cents)
         rows = rows.withColumn("gen", F.lit(0).cast("long"))
-        from hindex_spark.operators.artifact import clear_tombstones
-
         with catalog.write_lock(ix.table_name):
-            catalog.save_bucketed(
-                Table(rows, "cluster", f"{name}_annindex"),
-                num_buckets=num_buckets,
-            )
+            ix._write_table(rows)
             # a REBUILD starts at gen 0: clear the previous
             # incarnation's tombstones or they'd kill every fresh row
             clear_tombstones(ix._tombstone_path())
@@ -226,65 +217,15 @@ class AnnIndex:
             cents.coalesce(1).write.mode("overwrite").parquet(
                 ix._centroid_path()
             )
-            with open(ix._meta_path(), "w") as f:
-                json.dump({"id_col": id_col, "vec_col": vec_col,
-                           "n_clusters": n_clusters,
-                           "num_buckets": num_buckets, "cur_gen": 0,
-                           "pq_codebooks": codebooks,
-                           "pq_residual": ix.pq_residual}, f)
+            ix._save_meta()
         return ix
-
-    @classmethod
-    def open(cls, catalog, name: str) -> "AnnIndex":
-        with open(os.path.join(
-                catalog.root, f"{name}_annindex_meta.json")) as f:
-            m = json.load(f)
-        return cls(catalog, name, m["id_col"], m["vec_col"],
-                   m["n_clusters"], num_buckets=m.get("num_buckets", 32),
-                   cur_gen=m.get("cur_gen", 0),
-                   pq_codebooks=m.get("pq_codebooks"),
-                   pq_residual=m.get("pq_residual", False))
-
-    def _ensure_registered(self) -> None:
-        """Re-attach the session-scoped bucketed registration from the
-        files + persisted num_buckets on a fresh SparkSession
-        (tableExists, never a resolve — SearchIndex.update's
-        file-listing-cache hazard)."""
-        if not self.catalog.spark.catalog.tableExists(self.sql_name):
-            self.catalog._attach_bucketed(
-                self.sql_name,
-                os.path.join(self.catalog.root, self.table_name, "data"),
-                "cluster", ["cluster"], self.num_buckets,
-            )
-
-    def _tombstone_path(self) -> str:
-        from hindex_spark.operators.artifact import tombstone_path
-
-        return tombstone_path(self.catalog.root, self.table_name)
-
-    @property
-    def _vectors_raw(self) -> DataFrame:
-        """The vector table as stored — tombstoned generations included
-        (self-repairing registration)."""
-        self._ensure_registered()
-        self.catalog.spark.catalog.refreshTable(self.sql_name)
-        return self.catalog.spark.table(self.sql_name)
 
     @property
     def vectors(self) -> DataFrame:
         """The LIVE (cluster, id, vector, gen) rows: the stored table
         minus generations superseded by ``upsert``/``delete``
-        tombstones (operators/artifact.py). No tombstones -> the raw
-        frame, zero overhead. A re-embedded vector may move CLUSTERS —
-        exactly why replacement is a tombstone cut, not a
-        latest-wins-in-place: the old row lives in a different bucket
-        than the new one."""
-        from hindex_spark.operators.artifact import live_view
-
-        return live_view(
-            self._vectors_raw, self.id_col, self.catalog.spark,
-            self._tombstone_path(),
-        )
+        tombstones."""
+        return self._live(self._raw())
 
     @property
     def centroids(self) -> DataFrame:
@@ -300,46 +241,18 @@ class AnnIndex:
         frame, item 24)."""
         return self.catalog.spark.read.parquet(self._centroid_path())
 
-    def _reload_meta(self) -> None:
-        """Re-read the persisted meta (cur_gen, num_buckets) — MUST run
-        at the top of every locked mutation so another process's bumps
-        are never overwritten from a stale in-memory baseline (the
-        two-process chaos hazard)."""
-        if os.path.isfile(self._meta_path()):
-            with open(self._meta_path()) as f:
-                m = json.load(f)
-            self.num_buckets = m.get("num_buckets", self.num_buckets)
-            self.cur_gen = m.get("cur_gen", 0)
-
-    def _index_rows(self, new_vectors: DataFrame, gen: int) -> DataFrame:
-        """A batch's index rows in the table schema: frozen-centroid
-        cluster assignment, PQ codes/norm when the artifact has a
-        codebook (frozen too — same retrain contract), generation
-        stamp. One batch-sized map pass."""
+    def _append_batch(self, new_vectors: DataFrame, gen: int) -> None:
+        """A batch's index rows: frozen-centroid cluster assignment
+        (batch-sized, no corpus access), PQ codes/norm when the
+        artifact has a codebook (frozen too — same retrain contract),
+        generation stamp."""
         rows = assign_to_centroids(
             new_vectors.select(F.col(self.id_col), F.col(self.vec_col)),
             self.centroids, self.id_col, self.vec_col,
         )
         if self.pq_codebooks is not None:
             rows = self._with_pq_cols(rows, self.centroids)
-        return rows.withColumn("gen", F.lit(gen).cast("long"))
-
-    def update(self, new_vectors: DataFrame) -> None:
-        """Append a batch: assign to the FROZEN centroids (batch-sized,
-        no corpus access), INSERT INTO the cluster-bucketed table.
-        Assumes batch ids are new — re-ingesting an id adds rather than
-        replaces (the artifact-store append contract; ``upsert`` is the
-        replacement path)."""
-        view = f"__annindex_append_{self.name}"
-        sess = new_vectors.sparkSession  # foreachBatch session clone, see
-        with self.catalog.write_lock(self.table_name):  # SearchIndex.update
-            self._reload_meta()
-            rows = self._index_rows(new_vectors, self.cur_gen)
-            self._ensure_registered()
-            rows.createOrReplaceTempView(view)
-            sess.sql(f"INSERT INTO {self.sql_name} SELECT * FROM {view}")
-            sess.catalog.dropTempView(view)
-            self.catalog.spark.catalog.refreshTable(self.sql_name)
+        self._insert(rows.withColumn("gen", F.lit(gen).cast("long")))
 
     def _with_pq_cols(self, rows: DataFrame, centroids: DataFrame) -> DataFrame:
         """Add (codes, norm) to (cluster, id, vec) rows. Raw mode codes
@@ -366,106 +279,6 @@ class AnnIndex:
             .drop("centroid")
             .select("cluster", self.id_col, self.vec_col, "codes", "norm")
         )
-
-    def _bump_gen(self, new_gen: int) -> None:
-        self.cur_gen = new_gen
-        m = json.load(open(self._meta_path()))
-        m["cur_gen"] = new_gen
-        with open(self._meta_path(), "w") as f:
-            json.dump(m, f)
-
-    def upsert(self, new_vectors: DataFrame) -> None:
-        """Replace-or-insert a batch: ids already in the index get
-        their row superseded by a tombstone cut, new ids just append.
-        A re-embedded vector typically CHANGES cluster, so the old row
-        lives in a different bucket — replacement must be the tombstone
-        pattern (operators/artifact.py), not an in-place rewrite.
-        Tombstone -> vectors -> meta write order; crash mid-sequence
-        leaves the id temporarily absent, re-running completes it."""
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            new_gen = self.cur_gen + 1
-            batch_ids = new_vectors.select(self.id_col).distinct()
-            existing = (
-                self._vectors_raw
-                .join(F.broadcast(batch_ids), self.id_col, "left_semi")
-                .select(self.id_col).distinct()
-            )
-            # pure-insert upsert: no pre-existing ids -> no tombstone
-            # file, or every later read pays the broadcast cut for an
-            # empty set until the next compact (SearchIndex.upsert's
-            # `if old_n:` guard). The hit set is batch-bounded —
-            # persist it so the probe and the tombstone write share ONE
-            # index-scan job instead of replaying the semi-join twice.
-            existing = existing.persist()
-            try:
-                if existing.take(1):
-                    append_tombstones(
-                        existing, self.id_col, new_gen,
-                        self._tombstone_path(),
-                    )
-            finally:
-                existing.unpersist()
-            rows = self._index_rows(new_vectors, new_gen)
-            view = f"__annindex_upsert_{self.name}"
-            sess = rows.sparkSession
-            rows.createOrReplaceTempView(view)
-            sess.sql(f"INSERT INTO {self.sql_name} SELECT * FROM {view}")
-            sess.catalog.dropTempView(view)
-            self.catalog.spark.catalog.refreshTable(self.sql_name)
-            self._bump_gen(new_gen)
-
-    def delete(self, ids: DataFrame) -> None:
-        """Remove vectors from the index: one tombstone append cutting
-        every current generation of the given ids; physical purge at
-        the next ``compact()``."""
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            new_gen = self.cur_gen + 1
-            append_tombstones(
-                ids.select(self.id_col).distinct(), self.id_col, new_gen,
-                self._tombstone_path(),
-            )
-            self._bump_gen(new_gen)
-
-    def compact(self, num_buckets: Optional[int] = None) -> None:
-        """Fold multi-file buckets back to one file per bucket, purging
-        tombstoned generations (gens preserved — re-applying stale cuts
-        after a crash between save and clear is a no-op). Raw parquet
-        source — the bucketed scan's claimed partitioning would elide
-        the rewrite's repartition, see SearchIndex.compact."""
-        from hindex_spark.operators.artifact import clear_tombstones, live_view
-        from hindex_spark.table import Table
-
-        with self.catalog.write_lock(self.table_name):
-            # reload FIRST, resolve the default after: the handle's
-            # in-memory num_buckets may be stale across processes, and
-            # compacting on the stale value would revert another
-            # process's bucket-count change (the same stale-baseline
-            # hazard _reload_meta documents for the other mutations)
-            self._reload_meta()
-            if num_buckets is None:
-                num_buckets = self.num_buckets
-            rows = self.catalog.read_raw(self.table_name)
-            rows = live_view(
-                rows, self.id_col, self.catalog.spark, self._tombstone_path()
-            )
-            self.catalog.save_bucketed(
-                Table(rows, "cluster", f"{self.name}_annindex"),
-                num_buckets=num_buckets,
-            )
-            clear_tombstones(self._tombstone_path())
-            self.num_buckets = num_buckets
-            m = json.load(open(self._meta_path()))
-            m["num_buckets"] = num_buckets
-            with open(self._meta_path(), "w") as f:
-                json.dump(m, f)
 
     def retrain(self, n_clusters: Optional[int] = None, iters: int = 3,
                 sample_size: int = 65536) -> "AnnIndex":

@@ -25,13 +25,12 @@ verification — and never through the signature fold. Asserted by
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Optional, Union
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from hindex_spark.operators.artifact import KeyedStore, clear_tombstones
 from hindex_spark.operators.dedup import (
     AUTO_VALVE_FLOOR,
     AUTO_VALVE_MULT,
@@ -83,7 +82,7 @@ def state_rows(
     )
 
 
-class DedupState:
+class DedupState(KeyedStore):
     """Handle to a persisted dedup-state table inside a ``Catalog``.
 
     Lifecycle::
@@ -93,27 +92,33 @@ class DedupState:
         st.update(survivors)          # accepted docs join the state
         ...
         st = DedupState.open(cat, "docs")   # next session / next day
+
+    ``upsert`` is the shape a re-crawled/re-processed document needs:
+    its OLD signature must stop matching candidates.
     """
 
-    def __init__(self, catalog, name: str, id_col: str, text_col: str,
-                 ngram: int = 3, hash_fn: str = "md5",
-                 n_hashes: int = N_HASHES, band_size: int = 2,
-                 num_buckets: int = 32, cur_gen: int = 0,
-                 band_mod: Optional[int] = None):
-        self.num_buckets = num_buckets
-        self.cur_gen = cur_gen
-        self.catalog = catalog
-        self.name = name
-        self.id_col = id_col
-        self.text_col = text_col
-        self.ngram = ngram
-        self.hash_fn = hash_fn
+    kind = "dedupstate"
+
+    @property
+    def bucket_col(self) -> str:
+        return self.id_col
+
+    def _meta(self) -> dict:
+        return {**super()._meta(), "text_col": self.text_col,
+                "ngram": self.ngram, "hash_fn": self.hash_fn,
+                "n_hashes": self.n_hashes, "band_size": self.band_size,
+                "band_mod": self.band_mod}
+
+    def _load_meta(self, m: dict) -> None:
+        super()._load_meta(m)
+        self.text_col = m["text_col"]
+        self.ngram = m["ngram"]
+        self.hash_fn = m["hash_fn"]
         # The LSH family is part of the ARTIFACT's identity: stored
         # signatures are only band-compatible with themselves, so both
         # knobs persist in the meta and every query derives from them.
-        self.n_hashes = n_hashes
-        self.band_size = band_size
-        self.table_name = f"{name}_dedupstate_bucketed"
+        self.n_hashes = m.get("n_hashes", N_HASHES)
+        self.band_size = m.get("band_size", 2)
         # ``band_mod`` present <=> the store carries the BAND SIDE TABLE
         # (bk, band, bucket, id, gen), bucketed on bk =
         # pmod(xxhash64(band, bucket), band_mod): the inverted layout
@@ -124,19 +129,11 @@ class DedupState:
         # (guide §6: at 100 TB the full state read per daily batch is
         # the dominant store-side cost). None = a pre-band store; every
         # consumer falls back to the explode-from-state path.
-        self.band_mod = band_mod
-        self.band_table_name = f"{name}_dedupstate_bands_bucketed"
+        self.band_mod = m.get("band_mod")
 
     @property
-    def sql_name(self) -> str:
-        """Root-tagged session registration name (``table_name`` is the
-        catalog-root-relative directory; session SQL names are global —
-        Catalog.bucketed_sql_name)."""
-        return self.catalog.bucketed_sql_name(self.table_name)
-
-    @property
-    def band_sql_name(self) -> str:
-        return self.catalog.bucketed_sql_name(self.band_table_name)
+    def band_table_name(self) -> str:
+        return f"{self.name}_dedupstate_bands_bucketed"
 
     def _band_side_rows(self, sig_rows: DataFrame) -> DataFrame:
         """(bk, band, bucket, id, gen) band-side rows derived from a
@@ -155,9 +152,6 @@ class DedupState:
 
     # -- storage ------------------------------------------------------------
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.catalog.root, f"{self.name}_dedupstate_meta.json")
-
     @classmethod
     def build(cls, catalog, corpus: DataFrame, id_col: str, text_col: str,
               name: str, ngram: int = 3, hash_fn: str = "md5",
@@ -167,98 +161,32 @@ class DedupState:
         the narrow state bucketed on id. ~tens of bytes/doc — the 100 TB
         corpus's state is a few hundred GB, rewritten never, appended to
         per accepted batch."""
-        from hindex_spark.table import Table
-
-        st = cls(catalog, name, id_col, text_col, ngram, hash_fn,
-                 n_hashes, band_size, num_buckets=num_buckets,
-                 band_mod=num_buckets)
-        rows = state_rows(
+        st = cls(catalog, name, {
+            "id_col": id_col, "text_col": text_col, "ngram": ngram,
+            "hash_fn": hash_fn, "n_hashes": n_hashes,
+            "band_size": band_size, "num_buckets": num_buckets,
+            "cur_gen": 0, "band_mod": num_buckets,
+        })
+        st._write_table(state_rows(
             corpus, id_col, text_col, ngram, hash_fn, n_hashes
-        ).withColumn("gen", F.lit(0).cast("long"))
-        catalog.save_bucketed(
-            Table(rows, id_col, f"{name}_dedupstate"), num_buckets=num_buckets
-        )
+        ).withColumn("gen", F.lit(0).cast("long")))
         # the band side table derives from the JUST-SAVED state (one
         # narrow state-sized pass — never a second corpus re-shingle);
         # build cost is one-time setup, every batch then reads a
         # bucket-pruned slice instead of exploding the full state
-        bands = st._band_side_rows(catalog.spark.table(st.sql_name))
-        catalog.save_bucketed(
-            Table(bands, "bk", f"{name}_dedupstate_bands"),
-            num_buckets=num_buckets,
-        )
+        st._rebuild_sides(num_buckets)
         # a REBUILD starts at gen 0: clear the previous incarnation's
         # tombstones or they'd kill every fresh row
-        from hindex_spark.operators.artifact import clear_tombstones, tombstone_path
-
-        clear_tombstones(tombstone_path(catalog.root, f"{name}_dedupstate_bucketed"))
-        with open(st._meta_path(), "w") as f:
-            json.dump(
-                {"id_col": id_col, "text_col": text_col, "ngram": ngram,
-                 "hash_fn": hash_fn, "n_hashes": n_hashes,
-                 "band_size": band_size, "num_buckets": num_buckets,
-                 "cur_gen": 0, "band_mod": num_buckets}, f,
-            )
+        clear_tombstones(st._tombstone_path())
+        st._save_meta()
         return st
-
-    @classmethod
-    def open(cls, catalog, name: str) -> "DedupState":
-        with open(os.path.join(
-                catalog.root, f"{name}_dedupstate_meta.json")) as f:
-            m = json.load(f)
-        return cls(catalog, name, m["id_col"], m["text_col"],
-                   m["ngram"], m["hash_fn"],
-                   m.get("n_hashes", N_HASHES), m.get("band_size", 2),
-                   num_buckets=m.get("num_buckets", 32),
-                   cur_gen=m.get("cur_gen", 0),
-                   band_mod=m.get("band_mod"))
-
-    def _ensure_registered(self) -> None:
-        """Re-attach the session-scoped bucketed registration from the
-        files + persisted num_buckets on a fresh SparkSession. Uses
-        tableExists, never a resolve (see SearchIndex.update: resolving
-        would prime a file-listing cache that a later clone-session
-        INSERT silently misses)."""
-        if not self.catalog.spark.catalog.tableExists(self.sql_name):
-            self.catalog._attach_bucketed(
-                self.sql_name,
-                os.path.join(self.catalog.root, self.table_name, "data"),
-                self.id_col, [self.id_col], self.num_buckets,
-            )
-
-    def _tombstone_path(self) -> str:
-        from hindex_spark.operators.artifact import tombstone_path
-
-        return tombstone_path(self.catalog.root, self.table_name)
-
-    @property
-    def _df_raw(self) -> DataFrame:
-        """The state table as stored — tombstoned generations included
-        (self-repairing registration)."""
-        self._ensure_registered()
-        self.catalog.spark.catalog.refreshTable(self.sql_name)
-        return self.catalog.spark.table(self.sql_name)
 
     @property
     def df(self) -> DataFrame:
         """The LIVE persisted (id, __fp, mh0..mh7, gen) rows: the
         stored table minus generations superseded by
-        ``upsert``/``delete`` tombstones (operators/artifact.py). No
-        tombstones -> the raw frame, zero overhead."""
-        from hindex_spark.operators.artifact import live_view
-
-        return live_view(
-            self._df_raw, self.id_col, self.catalog.spark,
-            self._tombstone_path(),
-        )
-
-    def _ensure_bands_registered(self) -> None:
-        if not self.catalog.spark.catalog.tableExists(self.band_sql_name):
-            self.catalog._attach_bucketed(
-                self.band_sql_name,
-                os.path.join(self.catalog.root, self.band_table_name, "data"),
-                "bk", ["bk"], self.num_buckets,
-            )
+        ``upsert``/``delete`` tombstones."""
+        return self._live(self._raw())
 
     @property
     def bands(self) -> DataFrame:
@@ -267,201 +195,42 @@ class DedupState:
         exactly their state row's (id, gen), so one tombstone file cuts
         both tables — ``delete``/``upsert`` never write the side table's
         history twice."""
-        from hindex_spark.operators.artifact import live_view
+        return self._live(self._raw(self.band_table_name, "bk"))
 
-        self._ensure_bands_registered()
-        self.catalog.spark.catalog.refreshTable(self.band_sql_name)
-        return live_view(
-            self.catalog.spark.table(self.band_sql_name), self.id_col,
-            self.catalog.spark, self._tombstone_path(),
-        )
-
-    def _reload_meta(self) -> None:
-        """Re-read the persisted meta (cur_gen, num_buckets) into this
-        handle — MUST run at the top of every locked mutation: another
-        process may have bumped the generation since open/build, and a
-        delta applied to the stale baseline loses its update (caught by
-        the two-process chaos test)."""
-        if os.path.isfile(self._meta_path()):
-            with open(self._meta_path()) as f:
-                m = json.load(f)
-            self.num_buckets = m.get("num_buckets", self.num_buckets)
-            self.cur_gen = m.get("cur_gen", 0)
-            # absent key = a pre-band-table store: fall back everywhere
-            self.band_mod = m.get("band_mod")
-
-    def _insert_one(self, sess, sql_name: str, rows: DataFrame,
-                    view: str) -> None:
-        rows.createOrReplaceTempView(view)
-        sess.sql(f"INSERT INTO {sql_name} SELECT * FROM {view}")
-        sess.catalog.dropTempView(view)
-
-    def _append_rows(self, sess, rows: DataFrame, view: str) -> None:
+    def _append_batch(self, accepted: DataFrame, gen: int) -> None:
         """Append a batch's state rows and (when the store carries the
         band side table) its band rows. The batch frame is persisted so
-        the signature fold runs ONCE for both appends, and the two
-        delta-sized INSERTs run as concurrent jobs (guide §2.6 — same
-        overlap as JoinView._append_pair; different tables, no shared
-        input, still under the caller's write lock). A crash between
-        the two appends can leave the pair torn; ``compact()`` rebuilds
-        the band table FROM the state, so the next maintenance pass
-        converges them."""
-        self._ensure_registered()
+        the signature fold runs ONCE for both appends, which run as
+        concurrent jobs. A crash between the two appends can leave the
+        pair torn; ``compact()`` rebuilds the band table FROM the state,
+        so the next maintenance pass converges them."""
+        rows = state_rows(
+            accepted, self.id_col, self.text_col, self.ngram, self.hash_fn,
+            self.n_hashes,
+        ).withColumn("gen", F.lit(gen).cast("long"))
         if self.band_mod is None:
-            self._insert_one(sess, self.sql_name, rows, view)
-            self.catalog.spark.catalog.refreshTable(self.sql_name)
+            self._insert(rows)
             return
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
         from pyspark import StorageLevel  # noqa: PLC0415
 
-        self._ensure_bands_registered()
         rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            bands = self._band_side_rows(rows)
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fa = pool.submit(self._insert_one, sess, self.sql_name,
-                                 rows, view)
-                fb = pool.submit(self._insert_one, sess,
-                                 self.band_sql_name, bands,
-                                 f"{view}_bands")
-                fa.result()
-                fb.result()
+            self._insert_pair(
+                (rows,),
+                (self._band_side_rows(rows), self.band_table_name, "bk"),
+            )
         finally:
             rows.unpersist()
-        self.catalog.spark.catalog.refreshTable(self.sql_name)
-        self.catalog.spark.catalog.refreshTable(self.band_sql_name)
 
-    def update(self, accepted: DataFrame) -> None:
-        """Append the accepted batch's state rows — the per-batch
-        maintenance step. INSERT INTO honors the table's bucket spec, so
-        appends stay bucketed on id; no rewrite of existing state."""
-        view = f"__dedupstate_append_{self.name}"
-        # the batch's own session: inside foreachBatch the frame lives
-        # in a session clone and temp views are session-scoped (same
-        # fix as SearchIndex.update)
-        sess = accepted.sparkSession
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            rows = state_rows(
-                accepted, self.id_col, self.text_col, self.ngram, self.hash_fn,
-                self.n_hashes,
-            ).withColumn("gen", F.lit(self.cur_gen).cast("long"))
-            self._append_rows(sess, rows, view)
-
-    def _bump_gen(self, new_gen: int) -> None:
-        self.cur_gen = new_gen
-        m = json.load(open(self._meta_path()))
-        m["cur_gen"] = new_gen
-        with open(self._meta_path(), "w") as f:
-            json.dump(m, f)
-
-    def upsert(self, docs: DataFrame) -> None:
-        """Replace-or-insert state rows for a batch of doc ids: ids
-        already in the store get their (fingerprint, signature) row
-        superseded — a tombstone cuts every older generation — and new
-        ids just append. Tombstone -> state-append write order (the new
-        rows carry ``gen == below_gen``, so the tombstone can never
-        kill them); physical purge at the next ``compact()``. The shape
-        a re-crawled/re-processed document needs: its OLD signature
-        must stop matching candidates."""
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            new_gen = self.cur_gen + 1
-            batch_ids = docs.select(self.id_col).distinct()
-            existing = (
-                self._df_raw
-                .join(F.broadcast(batch_ids), self.id_col, "left_semi")
-                .select(self.id_col).distinct()
+    def _rebuild_sides(self, num_buckets: int) -> None:
+        """Rebuild the band side table FROM the just-written state
+        (never from its own history): purges its tombstoned generations
+        AND heals any torn state/band append pair a crash left."""
+        if self.band_mod is not None:
+            self._write_table(
+                self._band_side_rows(self.catalog.spark.table(self.sql_name)),
+                self.band_table_name, "bk", num_buckets,
             )
-            # pure-insert upsert: no pre-existing ids -> no tombstone
-            # file (AnnIndex/SearchIndex.upsert's guard). The hit set is
-            # batch-bounded — persist it so the probe and the tombstone
-            # write share ONE state-scan job instead of replaying the
-            # semi-join twice.
-            existing = existing.persist()
-            try:
-                if existing.take(1):
-                    append_tombstones(
-                        existing, self.id_col, new_gen,
-                        self._tombstone_path(),
-                    )
-            finally:
-                existing.unpersist()
-            rows = state_rows(
-                docs, self.id_col, self.text_col, self.ngram, self.hash_fn,
-                self.n_hashes,
-            ).withColumn("gen", F.lit(new_gen).cast("long"))
-            view = f"__dedupstate_upsert_{self.name}"
-            self._append_rows(rows.sparkSession, rows, view)
-            self._bump_gen(new_gen)
-
-    def delete(self, ids: DataFrame) -> None:
-        """Remove docs from the state (the corpus dropped them): one
-        tombstone append cutting every current generation of the given
-        ids. Nothing is rewritten until ``compact()``."""
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            new_gen = self.cur_gen + 1
-            append_tombstones(
-                ids.select(self.id_col).distinct(), self.id_col, new_gen,
-                self._tombstone_path(),
-            )
-            self._bump_gen(new_gen)
-
-    def compact(self, num_buckets: Optional[int] = None) -> None:
-        """Rewrite the state table as one file per bucket, purging
-        tombstoned generations (gens preserved — a crash between the
-        save and the tombstone clear re-applies the cuts as a no-op).
-        Every ``update()`` INSERT adds a file set per bucket; multi-file
-        buckets cost the scan its reported sort order and per-file
-        opens — periodic compaction restores build-time layout. Staged
-        write + atomic swap via the catalog. Source read as RAW parquet
-        (same reason as SearchIndex.compact: the bucketed scan's claimed
-        partitioning would elide the repartition and leave multi-file
-        buckets in place)."""
-        from hindex_spark.operators.artifact import clear_tombstones, live_view
-        from hindex_spark.table import Table
-
-        with self.catalog.write_lock(self.table_name):
-            # reload first: another process may have changed the bucket
-            # count; None means KEEP it (a maintenance pass must never
-            # silently reset a custom layout)
-            self._reload_meta()
-            if num_buckets is None:
-                num_buckets = self.num_buckets
-            rows = self.catalog.read_raw(self.table_name)
-            rows = live_view(
-                rows, self.id_col, self.catalog.spark, self._tombstone_path()
-            )
-            self.catalog.save_bucketed(
-                Table(rows, self.id_col, f"{self.name}_dedupstate"),
-                num_buckets=num_buckets,
-            )
-            if self.band_mod is not None:
-                # rebuild the band side table FROM the compacted state
-                # (never from its own history): purges its tombstoned
-                # generations AND heals any torn state/band append pair
-                # left by a crash between _append_rows' two INSERTs
-                bands = self._band_side_rows(
-                    self.catalog.spark.table(self.sql_name)
-                )
-                self.catalog.save_bucketed(
-                    Table(bands, "bk", f"{self.name}_dedupstate_bands"),
-                    num_buckets=num_buckets,
-                )
-            clear_tombstones(self._tombstone_path())
-            self.num_buckets = num_buckets
-            m = json.load(open(self._meta_path()))
-            m["num_buckets"] = num_buckets
-            with open(self._meta_path(), "w") as f:
-                json.dump(m, f)
 
     # -- the per-batch query ------------------------------------------------
 

@@ -48,6 +48,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hindex_spark.operators.artifact import meta_path, read_meta, write_meta
 from hindex_spark.operators.dedup import _unit_hash
 from hindex_spark.operators.text import tokens
 
@@ -556,9 +557,7 @@ class ImportanceModel:
         return os.path.join(self.catalog.root, f"{self.name}_importance_fit")
 
     def _meta_path(self) -> str:
-        import os
-
-        return os.path.join(self.catalog.root, f"{self.name}_importance_meta.json")
+        return meta_path(self.catalog.root, self.name, "importance")
 
     @classmethod
     def fit(cls, catalog, name: str, target: DataFrame, raw: DataFrame,
@@ -569,8 +568,6 @@ class ImportanceModel:
         parquet artifact. The fit's identity knobs (n_buckets, hash_fn,
         text_col) persist in the meta — stored counts are only
         comparable under the same featurization."""
-        import json
-
         m = cls(catalog, name, text_col, n_buckets, hash_fn)
         t = bucket_counts(target, text_col, n_buckets, hash_fn)
         r = bucket_counts(raw, text_col, n_buckets, hash_fn)
@@ -585,17 +582,14 @@ class ImportanceModel:
             )
         )
         merged.coalesce(1).write.mode("overwrite").parquet(m._data_path())
-        with open(m._meta_path(), "w") as f:
-            json.dump({"text_col": text_col, "n_buckets": n_buckets,
-                       "hash_fn": hash_fn}, f)
+        write_meta(m._meta_path(), {"text_col": text_col,
+                                    "n_buckets": n_buckets,
+                                    "hash_fn": hash_fn})
         return m
 
     @classmethod
     def open(cls, catalog, name: str) -> "ImportanceModel":
-        import json
-
-        with open(cls(catalog, name, "")._meta_path()) as f:
-            meta = json.load(f)
+        meta = read_meta(meta_path(catalog.root, name, "importance"))
         return cls(catalog, name, meta["text_col"], meta["n_buckets"],
                    meta["hash_fn"])
 

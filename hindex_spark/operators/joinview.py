@@ -32,7 +32,7 @@ correction map says so, and the whole-generation cut is a driver-side
 ``NOT IN (dead gens)`` scan filter — zero extra jobs, pushed to the
 parquet scan. ``compact()`` rewrites the three tables without dead
 rows and SEALS the folded generations (corrections of them are refused
-afterwards — same rule as RollupStore.compact).
+afterwards — the generation-store rule, operators/artifact.py).
 
 Scale: updates cost one delta-sized bucketed join + delta-sized
 appends; reads cost a scan filter over the materialized result —
@@ -42,15 +42,15 @@ key-grouped consumption stays exchange-free.
 
 from __future__ import annotations
 
-import json
-import os
 from typing import List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hindex_spark.operators.artifact import VersionedStore
 
-class JoinView:
+
+class JoinView(VersionedStore):
     """Persisted incrementally-maintained inner equi-join.
 
     Lifecycle::
@@ -60,35 +60,16 @@ class JoinView:
         rg = jv.update_right(new_items)
         jv.replace_right_batch(rg, fixed)   # correct a bad batch
         joined = jv.read()                  # materialized, no join
+
+    Each side ("l", "r") is its own generation line; version history
+    entries carry the ``side`` they touched ("" = both, compact).
     """
 
-    def __init__(self, catalog, name: str, key: str,
-                 left_cols: List[str], right_cols: List[str],
-                 num_buckets: int = 32):
-        self.catalog = catalog
-        self.name = name
-        self.key = key
-        self.left_cols = list(left_cols)
-        self.right_cols = list(right_cols)
-        self.num_buckets = num_buckets
-        self.cur_lgen = 0
-        self.cur_rgen = 0
-        self.sealed_lbelow = 0
-        self.sealed_rbelow = 0
-        #: str(gen) -> superseding gen (None = retracted); a gen is
-        #: DEAD iff present here. Same refusal algebra as RollupStore.
-        self.corrected_l = {}
-        self.corrected_r = {}
-        #: version history for time travel (read_asof): one entry per
-        #: mutating verb — {"v", "op", "side", "add", "drop"}; compact
-        #: seals everything before it. None on stores written before
-        #: versions existed.
-        self.history = [{"v": 0, "op": "build", "side": "",
-                         "add": [], "drop": []}]
-        self.cur_version = 0
-        self.sealed_version = 0
+    kind = "joinview"
 
-    # -- storage ------------------------------------------------------------
+    @property
+    def bucket_col(self) -> str:
+        return self.key
 
     @property
     def table_name(self) -> str:
@@ -100,48 +81,29 @@ class JoinView:
     def _tbl(self, side: str) -> str:
         return f"{self.name}_jv{side}_bucketed"
 
-    def _sql(self, side: str) -> str:
-        return self.catalog.bucketed_sql_name(self._tbl(side))
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.catalog.root,
-                            f"{self.name}_joinview_meta.json")
-
     def _meta(self) -> dict:
-        return {"key": self.key, "left_cols": self.left_cols,
+        return {**super()._meta(), "key": self.key,
+                "left_cols": self.left_cols,
                 "right_cols": self.right_cols,
-                "num_buckets": self.num_buckets,
                 "cur_lgen": self.cur_lgen, "cur_rgen": self.cur_rgen,
                 "sealed_lbelow": self.sealed_lbelow,
                 "sealed_rbelow": self.sealed_rbelow,
                 "corrected_l": self.corrected_l,
-                "corrected_r": self.corrected_r,
-                "history": self.history,
-                "cur_version": self.cur_version,
-                "sealed_version": self.sealed_version}
+                "corrected_r": self.corrected_r}
 
-    def _load(self, m: dict) -> None:
-        self.num_buckets = m.get("num_buckets", 32)
+    def _load_meta(self, m: dict) -> None:
+        super()._load_meta(m)
+        self.key = m["key"]
+        self.left_cols = list(m["left_cols"])
+        self.right_cols = list(m["right_cols"])
         self.cur_lgen = m.get("cur_lgen", 0)
         self.cur_rgen = m.get("cur_rgen", 0)
         self.sealed_lbelow = m.get("sealed_lbelow", 0)
         self.sealed_rbelow = m.get("sealed_rbelow", 0)
+        #: str(gen) -> superseding gen (None = retracted); a gen is
+        #: DEAD iff present here
         self.corrected_l = m.get("corrected_l", {})
         self.corrected_r = m.get("corrected_r", {})
-        self.history = m.get("history")
-        self.cur_version = m.get("cur_version", 0)
-        self.sealed_version = m.get("sealed_version", 0)
-
-    def _reload_meta(self) -> None:
-        """Top of every locked mutation — another process may have
-        advanced either side (the cross-process lost-update guard every
-        store in this repo applies)."""
-        with open(self._meta_path()) as f:
-            self._load(json.load(f))
-
-    def _commit_meta(self) -> None:
-        with open(self._meta_path(), "w") as f:
-            json.dump(self._meta(), f)
 
     @classmethod
     def build(cls, catalog, left: DataFrame, right: DataFrame, key: str,
@@ -149,8 +111,6 @@ class JoinView:
         """Materialize the initial join (generation 0 on both sides).
         Non-key column names must be disjoint across sides — the MV
         carries both payloads side by side."""
-        from hindex_spark.table import Table
-
         lcols = [c for c in left.columns if c != key]
         rcols = [c for c in right.columns if c != key]
         clash = sorted(set(lcols) & set(rcols))
@@ -161,12 +121,17 @@ class JoinView:
             )
         if key not in left.columns or key not in right.columns:
             raise ValueError(f"join key {key!r} missing from a side")
-        jv = cls(catalog, name, key, lcols, rcols, num_buckets)
+        jv = cls(catalog, name, {
+            "key": key, "left_cols": lcols, "right_cols": rcols,
+            "num_buckets": num_buckets,
+            "history": [{"v": 0, "op": "build", "side": "",
+                         "add": [], "drop": []}],
+        })
         # Normalize to key-first column order BEFORE persisting: every
-        # later append (_append) is a positional INSERT INTO that
-        # selects (key, *cols, gen) — a build frame with the key not
-        # first would otherwise store a swapped layout that appends
-        # silently corrupt.
+        # later append is a positional INSERT INTO that selects
+        # (key, *cols, gen) — a build frame with the key not first
+        # would otherwise store a swapped layout that appends silently
+        # corrupt.
         left = left.select(key, *lcols)
         right = right.select(key, *rcols)
         lrows = left.withColumn("gen", F.lit(0).cast("long"))
@@ -178,34 +143,9 @@ class JoinView:
             .select(key, *lcols, *rcols, "lgen", "rgen")
         )
         for side, rows in (("l", lrows), ("r", rrows), ("mv", mv)):
-            catalog.save_bucketed(
-                Table(rows, key, f"{name}_jv{side}"), num_buckets=num_buckets
-            )
-        jv._commit_meta()
+            jv._write_table(rows, jv._tbl(side))
+        jv._save_meta()
         return jv
-
-    @classmethod
-    def open(cls, catalog, name: str) -> "JoinView":
-        with open(os.path.join(
-                catalog.root, f"{name}_joinview_meta.json")) as f:
-            m = json.load(f)
-        jv = cls(catalog, name, m["key"], m["left_cols"], m["right_cols"])
-        jv._load(m)
-        return jv
-
-    def _ensure_registered(self) -> None:
-        for side in ("l", "r", "mv"):
-            if not self.catalog.spark.catalog.tableExists(self._sql(side)):
-                self.catalog._attach_bucketed(
-                    self._sql(side),
-                    os.path.join(self.catalog.root, self._tbl(side), "data"),
-                    self.key, [self.key], self.num_buckets,
-                )
-
-    def _raw(self, side: str) -> DataFrame:
-        self._ensure_registered()
-        self.catalog.spark.catalog.refreshTable(self._sql(side))
-        return self.catalog.spark.table(self._sql(side))
 
     @staticmethod
     def _minus_dead(df: DataFrame, gen_col: str, dead: dict) -> DataFrame:
@@ -217,17 +157,19 @@ class JoinView:
 
     def left_rows(self) -> DataFrame:
         """The live left side (surviving batches)."""
-        return self._minus_dead(self._raw("l"), "gen", self.corrected_l)
+        return self._minus_dead(self._raw(self._tbl("l")), "gen",
+                                self.corrected_l)
 
     def right_rows(self) -> DataFrame:
-        return self._minus_dead(self._raw("r"), "gen", self.corrected_r)
+        return self._minus_dead(self._raw(self._tbl("r")), "gen",
+                                self.corrected_r)
 
     def read(self, with_gens: bool = False) -> DataFrame:
         """The maintained join — a filtered scan of the materialized
         table, NEVER a join. A row is live iff BOTH its source
         generations survive."""
         mv = self._minus_dead(
-            self._minus_dead(self._raw("mv"), "lgen", self.corrected_l),
+            self._minus_dead(self._raw(), "lgen", self.corrected_l),
             "rgen", self.corrected_r,
         )
         return mv if with_gens else mv.drop("lgen", "rgen")
@@ -243,7 +185,7 @@ class JoinView:
         adding the first match for a key must retract its null row),
         which buys nothing over this bounded read-time derivation.
         ``read_right_outer`` is the caller swapping sides at build."""
-        mv_schema = {f.name: f.dataType for f in self._raw("mv").schema}
+        mv_schema = {f.name: f.dataType for f in self._raw().schema}
         rkeys = self.right_rows().select(self.key).distinct()
         unmatched = (
             self.left_rows().drop("gen")
@@ -293,25 +235,10 @@ class JoinView:
             )
         return out if with_gens else out.drop("lgen", "rgen")
 
-    def _record_version(self, op: str, side: str, add=(), drop=(),
-                        seal: bool = False) -> None:
-        """Append one verb to the version history (caller holds the
-        lease and commits meta afterwards). Pre-history stores stay
-        history-less — a partial history reconstructs WRONG states."""
-        if self.history is None:
-            return
-        self.cur_version += 1
-        self.history.append({
-            "v": self.cur_version, "op": op, "side": side,
-            "add": [int(g) for g in add], "drop": [int(g) for g in drop],
-        })
-        if seal:
-            self.sealed_version = self.cur_version
-
     def _live_at(self, version: int) -> dict:
         """Replay the history prefix into per-side live generation
         sets. Compact's folded gens ADD without clearing — the same
-        tolerant replay as RollupStore._live_gens_at (pre-fold rows
+        tolerant replay as GenerationStore._live_gens_at (pre-fold rows
         and folded rows are disjoint alternatives carrying identical
         values, so the union reads correctly before AND after the
         rewrite, including a crash between meta commit and fold)."""
@@ -327,71 +254,21 @@ class JoinView:
                 live["r"] |= set(ev["add"][1:])
         return live
 
-    def versions(self) -> list:
-        """The store's version history (DESCRIBE HISTORY), oldest
-        first; entries below ``sealed_version`` are listed but no
-        longer readable."""
-        return list(self.history or [])
-
     def read_asof(self, version: int, with_gens: bool = False) -> DataFrame:
         """TIME TRAVEL: the view exactly as ``read()`` returned it at
         store version ``version`` (build = 0; every mutating verb
         bumps, ``versions()`` lists them). A generation-set scan
         filter replayed from meta — zero extra jobs; versions before
         the last compact() rewrite are refused (the VACUUM rule)."""
-        self._reload_meta()
-        if self.history is None:
-            raise ValueError(
-                f"join view {self.name} predates version history; "
-                "rebuild it to enable time travel"
-            )
-        if version > self.cur_version:
-            raise ValueError(
-                f"version {version} does not exist (cur_version="
-                f"{self.cur_version})"
-            )
-        if version < self.sealed_version:
-            sealing = next(
-                ev for ev in self.history if ev["v"] == self.sealed_version
-            )
-            raise ValueError(
-                f"version {version} was sealed by {sealing['op']}() at "
-                f"version {self.sealed_version}: the rewrite purged rows "
-                "its reconstruction needs"
-            )
+        self._check_asof(version, "join view")
         live = self._live_at(version)
-        mv = self._raw("mv").filter(
+        mv = self._raw().filter(
             F.col("lgen").isin([int(g) for g in sorted(live["l"])])
             & F.col("rgen").isin([int(g) for g in sorted(live["r"])])
         )
         return mv if with_gens else mv.drop("lgen", "rgen")
 
     # -- maintenance --------------------------------------------------------
-
-    def _append(self, side: str, rows: DataFrame) -> None:
-        view = f"__jv_append_{self.name}_{side}"
-        sess = rows.sparkSession
-        rows.createOrReplaceTempView(view)
-        sess.sql(f"INSERT INTO {self._sql(side)} SELECT * FROM {view}")
-        sess.catalog.dropTempView(view)
-        self.catalog.spark.catalog.refreshTable(self._sql(side))
-
-    def _append_pair(self, a, b) -> None:
-        """Run two independent side appends as CONCURRENT jobs (they
-        write different tables and share no input): Spark's scheduler
-        happily overlaps them, so the update's wall time is the max of
-        the two delta-sized writes instead of their sum — the
-        idle-capacity overlap of optimization-guide §2.6. Thread count
-        is fixed at 2; failures propagate from both futures. Still
-        under the store's write lock, so external ordering and the
-        meta commit are unchanged."""
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(self._append, a[0], a[1])
-            fb = pool.submit(self._append, b[0], b[1])
-            fa.result()
-            fb.result()
 
     def _check_side(self, batch: DataFrame, cols: List[str]) -> None:
         want = {self.key, *cols}
@@ -401,157 +278,105 @@ class JoinView:
                 f"{sorted(want)}"
             )
 
+    def _side(self, side: str):
+        """(cur gen, sealed-below, correction map, payload columns) of
+        side ``"l"`` or ``"r"``; the map is the live object."""
+        if side == "l":
+            return (self.cur_lgen, self.sealed_lbelow, self.corrected_l,
+                    self.left_cols)
+        return (self.cur_rgen, self.sealed_rbelow, self.corrected_r,
+                self.right_cols)
+
+    def _append_side(self, side: str, batch: DataFrame, gen: int) -> None:
+        """Append a ``side`` batch at ``gen``: the delta join against
+        the other side's LIVE rows into the MV, and the batch itself
+        into its side table — two delta-sized INSERTs run as
+        concurrent jobs (different tables, no shared input)."""
+        g = F.lit(gen).cast("long")
+        if side == "l":
+            delta = (batch.join(self.right_rows(), self.key)
+                     .withColumnRenamed("gen", "rgen").withColumn("lgen", g))
+        else:
+            delta = (self.left_rows().withColumnRenamed("gen", "lgen")
+                     .join(batch, self.key).withColumn("rgen", g))
+        # column order must match the stored MV exactly (positional
+        # INSERT INTO)
+        delta = delta.select(
+            self.key, *self.left_cols, *self.right_cols, "lgen", "rgen"
+        )
+        rows = batch.select(self.key, *self._side(side)[3]).withColumn(
+            "gen", g)
+        self._insert_pair((delta,), (rows, self._tbl(side)))
+
+    def _update(self, side: str, batch: DataFrame) -> int:
+        self._check_side(batch, self._side(side)[3])
+        with self.catalog.write_lock(self.table_name):
+            self._reload_meta()
+            gen = self._side(side)[0] + 1
+            self._append_side(side, batch, gen)
+            setattr(self, f"cur_{side}gen", gen)
+            self._record_version("update", add=[gen], side=side)
+            self._save_meta()
+        return gen
+
+    def _delete(self, side: str, gen: int) -> None:
+        with self.catalog.write_lock(self.table_name):
+            self._reload_meta()
+            cur, sealed, corrected, _ = self._side(side)
+            self._check_correctable(gen, cur, sealed, corrected,
+                                    f"{side}-generation")
+            corrected[str(gen)] = None
+            self._record_version("delete", drop=[gen], side=side)
+            self._save_meta()
+
+    def _replace(self, side: str, gen: int, batch: DataFrame) -> int:
+        self._check_side(batch, self._side(side)[3])
+        with self.catalog.write_lock(self.table_name):
+            self._reload_meta()
+            cur, sealed, corrected, _ = self._side(side)
+            self._check_correctable(gen, cur, sealed, corrected,
+                                    f"{side}-generation")
+            new_gen = cur + 1
+            corrected[str(gen)] = new_gen
+            self._append_side(side, batch, new_gen)
+            setattr(self, f"cur_{side}gen", new_gen)
+            self._record_version("replace", add=[new_gen], drop=[gen],
+                                 side=side)
+            self._save_meta()
+        return new_gen
+
     def update_left(self, batch: DataFrame) -> int:
         """Append a left batch: delta join against the live right
         store, both appends delta-sized. Returns the batch's
         generation (the handle corrections use)."""
-        self._check_side(batch, self.left_cols)
-        with self.catalog.write_lock(self._tbl("mv")):
-            self._reload_meta()
-            self._ensure_registered()
-            gen = self.cur_lgen + 1
-            delta = (
-                batch.join(self.right_rows(), self.key)
-                .withColumnRenamed("gen", "rgen")
-                .withColumn("lgen", F.lit(gen).cast("long"))
-            )
-            # column order must match the stored MV exactly (positional
-            # INSERT INTO)
-            delta = delta.select(
-                self.key, *self.left_cols, *self.right_cols, "lgen", "rgen"
-            )
-            self._append_pair(
-                ("mv", delta),
-                ("l", batch.select(self.key, *self.left_cols)
-                 .withColumn("gen", F.lit(gen).cast("long"))),
-            )
-            self.cur_lgen = gen
-            self._record_version("update", "l", add=[gen])
-            self._commit_meta()
-        return gen
+        return self._update("l", batch)
 
     def update_right(self, batch: DataFrame) -> int:
-        self._check_side(batch, self.right_cols)
-        with self.catalog.write_lock(self._tbl("mv")):
-            self._reload_meta()
-            self._ensure_registered()
-            gen = self.cur_rgen + 1
-            delta = (
-                self.left_rows().withColumnRenamed("gen", "lgen")
-                .join(batch, self.key)
-                .withColumn("rgen", F.lit(gen).cast("long"))
-            )
-            delta = delta.select(
-                self.key, *self.left_cols, *self.right_cols, "lgen", "rgen"
-            )
-            self._append_pair(
-                ("mv", delta),
-                ("r", batch.select(self.key, *self.right_cols)
-                 .withColumn("gen", F.lit(gen).cast("long"))),
-            )
-            self.cur_rgen = gen
-            self._record_version("update", "r", add=[gen])
-            self._commit_meta()
-        return gen
-
-    def _check_correctable(self, gen: int, side: str) -> None:
-        cur = self.cur_lgen if side == "l" else self.cur_rgen
-        sealed = self.sealed_lbelow if side == "l" else self.sealed_rbelow
-        corrected = self.corrected_l if side == "l" else self.corrected_r
-        if gen < sealed:
-            raise ValueError(
-                f"{side}-generation {gen} was folded by compact() "
-                f"(sealed below {sealed}); its batch identity is gone"
-            )
-        if gen > cur:
-            raise ValueError(
-                f"{side}-generation {gen} does not exist (cur={cur})"
-            )
-        prior = corrected.get(str(gen), "__absent__")
-        if prior is None:
-            raise ValueError(
-                f"{side}-generation {gen} was already retracted; "
-                "nothing left to correct"
-            )
-        if prior != "__absent__":
-            raise ValueError(
-                f"{side}-generation {gen} was already superseded by "
-                f"generation {prior}; correct that instead"
-            )
+        return self._update("r", batch)
 
     def delete_left_batch(self, gen: int) -> None:
         """Retract a left batch: one meta write — the MV rows it
         produced die by their ``lgen`` stamp, nothing is scanned or
         rewritten until compact()."""
-        with self.catalog.write_lock(self._tbl("mv")):
-            self._reload_meta()
-            self._check_correctable(gen, "l")
-            self.corrected_l[str(gen)] = None
-            self._record_version("delete", "l", drop=[gen])
-            self._commit_meta()
+        self._delete("l", gen)
 
     def delete_right_batch(self, gen: int) -> None:
-        with self.catalog.write_lock(self._tbl("mv")):
-            self._reload_meta()
-            self._check_correctable(gen, "r")
-            self.corrected_r[str(gen)] = None
-            self._record_version("delete", "r", drop=[gen])
-            self._commit_meta()
+        self._delete("r", gen)
 
     def replace_left_batch(self, gen: int, corrected: DataFrame) -> int:
         """Correct a left batch: retract + append-corrected under ONE
         lease (readers between the two steps of a lockless version
         would see the join without the batch). Returns the new
         generation."""
-        self._check_side(corrected, self.left_cols)
-        with self.catalog.write_lock(self._tbl("mv")):
-            self._reload_meta()
-            self._ensure_registered()
-            self._check_correctable(gen, "l")
-            new_gen = self.cur_lgen + 1
-            self.corrected_l[str(gen)] = new_gen
-            delta = (
-                corrected.join(self.right_rows(), self.key)
-                .withColumnRenamed("gen", "rgen")
-                .withColumn("lgen", F.lit(new_gen).cast("long"))
-            ).select(
-                self.key, *self.left_cols, *self.right_cols, "lgen", "rgen"
-            )
-            self._append("mv", delta)
-            self._append("l", corrected.select(self.key, *self.left_cols)
-                         .withColumn("gen", F.lit(new_gen).cast("long")))
-            self.cur_lgen = new_gen
-            self._record_version("replace", "l", add=[new_gen], drop=[gen])
-            self._commit_meta()
-        return new_gen
+        return self._replace("l", gen, corrected)
 
     def replace_right_batch(self, gen: int, corrected: DataFrame) -> int:
-        self._check_side(corrected, self.right_cols)
-        with self.catalog.write_lock(self._tbl("mv")):
-            self._reload_meta()
-            self._ensure_registered()
-            self._check_correctable(gen, "r")
-            new_gen = self.cur_rgen + 1
-            self.corrected_r[str(gen)] = new_gen
-            delta = (
-                self.left_rows().withColumnRenamed("gen", "lgen")
-                .join(corrected, self.key)
-                .withColumn("rgen", F.lit(new_gen).cast("long"))
-            ).select(
-                self.key, *self.left_cols, *self.right_cols, "lgen", "rgen"
-            )
-            self._append("mv", delta)
-            self._append("r", corrected.select(self.key, *self.right_cols)
-                         .withColumn("gen", F.lit(new_gen).cast("long")))
-            self.cur_rgen = new_gen
-            self._record_version("replace", "r", add=[new_gen], drop=[gen])
-            self._commit_meta()
-        return new_gen
+        return self._replace("r", gen, corrected)
 
     def compact(self, num_buckets: Optional[int] = None) -> None:
         """Purge dead generations physically and fold the survivors to
         one fresh generation per side — corrections of folded batches
-        are refused afterwards (sealed), the RollupStore.compact rule.
+        are refused afterwards (sealed), as in every generation store.
 
         Crash safety is a TWO-step meta commit: (1) before any rewrite,
         bump + seal the generation counters but KEEP the correction
@@ -560,11 +385,8 @@ class JoinView:
         unfolded tables' dead gens still are) and the bumped counters
         prevent a later update from colliding with a folded gen;
         (2) only after all three rewrites, clear the maps."""
-        from hindex_spark.table import Table
-
-        with self.catalog.write_lock(self._tbl("mv")):
+        with self.catalog.write_lock(self.table_name):
             self._reload_meta()
-            self._ensure_registered()
             if num_buckets is None:
                 num_buckets = self.num_buckets
             new_l, new_r = self.cur_lgen + 1, self.cur_rgen + 1
@@ -584,14 +406,12 @@ class JoinView:
             self.cur_lgen, self.cur_rgen = new_l, new_r
             self.sealed_lbelow, self.sealed_rbelow = new_l, new_r
             self.num_buckets = num_buckets
-            self._record_version("compact", "", add=[new_l, new_r],
-                                 seal=True)
-            self._commit_meta()            # step 1: bump + seal
+            self._record_version("compact", add=[new_l, new_r], seal=True,
+                                 side="")
+            self._save_meta()              # step 1: bump + seal
             for side, rows in (("l", live_l), ("r", live_r),
                                ("mv", live_mv)):
-                self.catalog.save_bucketed(
-                    Table(rows, self.key, f"{self.name}_jv{side}"),
-                    num_buckets=num_buckets,
-                )
+                self._write_table(rows, self._tbl(side),
+                                  num_buckets=num_buckets)
             self.corrected_l, self.corrected_r = {}, {}
-            self._commit_meta()            # step 2: maps cleared
+            self._save_meta()              # step 2: maps cleared

@@ -30,13 +30,12 @@ corpus rescan.
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hindex_spark.operators.artifact import GenerationStore, clear_tombstones
 from hindex_spark.timeutil import ts_micros
 
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint", "long")
@@ -446,7 +445,7 @@ def render_profile(merged: DataFrame, kinds: Dict[str, str],
     return merged.select(*out_cols)
 
 
-class ProfileStore:
+class ProfileStore(GenerationStore):
     """Persisted mergeable data-quality ledger inside a ``Catalog`` —
     the batch-ingest companion to the one-shot :func:`profile`: each
     accepted batch appends its (tiny — one row per column) profile
@@ -454,9 +453,8 @@ class ProfileStore:
     whole-corpus profile without ever rescanning the corpus. At 100 TB
     that is the difference between "profile the corpus" being a daily
     batch-sized job and an impossible full-table pass; a misreported
-    batch is corrected by ``replace_batch`` (generation tombstones —
-    the artifact machinery shared with RollupStore/DedupState), never
-    by recomputation.
+    batch is corrected by ``replace_batch`` (generation tombstones,
+    operators/artifact.py), never by recomputation.
 
     Lifecycle::
 
@@ -467,76 +465,22 @@ class ProfileStore:
         ps.compact()                       # fold to one row per column
     """
 
-    def __init__(self, catalog, name: str, columns: List[str],
-                 kinds: Dict[str, str], ndv_lgk: int = 16,
-                 num_buckets: int = 4, pctl_k: Optional[int] = None):
-        self.catalog = catalog
-        self.name = name
-        self.columns = list(columns)
-        self.kinds = dict(kinds)
-        self.ndv_lgk = ndv_lgk
-        #: KLL quantile sketch capacity (None = store carries no
-        #: quantile column); part of the artifact identity like ndv_lgk
-        self.pctl_k = pctl_k
-        self.num_buckets = num_buckets
-        self.cur_gen = 0
-        self.sealed_below = 0
-        #: str(gen) -> superseding gen (None = retracted); refuse
-        #: re-correcting a dead generation (RollupStore._check_correctable)
-        self.corrected = {}
-        #: version history for time travel (read_asof) — the
-        #: RollupStore mechanism verbatim; None on pre-history stores
-        self.history = None
-        self.cur_version = 0
-        self.sealed_version = 0
-        self.table_name = f"{name}_profilestore_bucketed"
-
-    @property
-    def sql_name(self) -> str:
-        return self.catalog.bucketed_sql_name(self.table_name)
-
-    def _meta_path(self) -> str:
-        return os.path.join(
-            self.catalog.root, f"{self.name}_profilestore_meta.json")
+    kind = "profilestore"
+    bucket_col = "col_name"
 
     def _meta(self) -> dict:
-        return {"columns": self.columns, "kinds": self.kinds,
-                "ndv_lgk": self.ndv_lgk, "num_buckets": self.num_buckets,
-                "pctl_k": self.pctl_k,
-                "cur_gen": self.cur_gen, "sealed_below": self.sealed_below,
-                "corrected": self.corrected,
-                "history": self.history, "cur_version": self.cur_version,
-                "sealed_version": self.sealed_version}
+        return {**super()._meta(), "columns": self.columns,
+                "kinds": self.kinds, "ndv_lgk": self.ndv_lgk,
+                "pctl_k": self.pctl_k}
 
-    def _reload_meta(self) -> None:
-        """Re-read persisted meta at the top of every locked mutation —
-        another process may have bumped the generation (or even rebuilt
-        the store with a different column/sketch identity) since this
-        handle opened; a delta applied to a stale baseline loses its
-        update (the cross-process lost-update pattern the other stores
-        guard against)."""
-        with open(self._meta_path()) as f:
-            m = json.load(f)
-        self.num_buckets = m.get("num_buckets", 4)
-        self.cur_gen = m.get("cur_gen", 0)
-        self.sealed_below = m.get("sealed_below", 0)
-        self.corrected = m.get("corrected", {})
-        self.columns = m.get("columns", self.columns)
-        self.kinds = m.get("kinds", self.kinds)
-        self.ndv_lgk = m.get("ndv_lgk", self.ndv_lgk)
-        self.pctl_k = m.get("pctl_k", self.pctl_k)
-        self.history = m.get("history")
-        self.cur_version = m.get("cur_version", 0)
-        self.sealed_version = m.get("sealed_version", 0)
-
-    def _save_meta(self) -> None:
-        with open(self._meta_path(), "w") as f:
-            json.dump(self._meta(), f)
-
-    def _tombstone_path(self) -> str:
-        from hindex_spark.operators.artifact import tombstone_path
-
-        return tombstone_path(self.catalog.root, self.table_name)
+    def _load_meta(self, m: dict) -> None:
+        super()._load_meta(m)
+        self.columns = list(m["columns"])
+        self.kinds = dict(m["kinds"])
+        self.ndv_lgk = m.get("ndv_lgk", 16)
+        #: KLL quantile sketch capacity (None = store carries no
+        #: quantile column); part of the artifact identity like ndv_lgk
+        self.pctl_k = m.get("pctl_k")
 
     @classmethod
     def build(cls, catalog, batch: DataFrame, columns: List[str],
@@ -547,64 +491,28 @@ class ProfileStore:
         here are the artifact's identity: every later batch must carry
         the same column types (asserted by ``update``) or the typed
         min/max slots and sketch value spaces would silently mix."""
-        from hindex_spark.operators.artifact import clear_tombstones
-        from hindex_spark.table import Table
-
         dtypes = dict(batch.dtypes)
-        kinds = {c: _kind_of(dtypes[c]) for c in columns}
-        ps = cls(catalog, name, columns, kinds, ndv_lgk, num_buckets,
-                 pctl_k=pctl_k)
-        rows = profile_partials(batch, columns, ndv_lgk, pctl_k=pctl_k
-                                ).withColumn("gen", F.lit(0).cast("long"))
-        catalog.save_bucketed(
-            Table(rows, "col_name", f"{name}_profilestore"),
-            num_buckets=num_buckets,
-        )
+        ps = cls(catalog, name, {
+            "columns": list(columns),
+            "kinds": {c: _kind_of(dtypes[c]) for c in columns},
+            "ndv_lgk": ndv_lgk, "num_buckets": num_buckets,
+            "pctl_k": pctl_k,
+            "history": [{"v": 0, "op": "build", "add": [0], "drop": [],
+                         "reset": True}],
+        })
+        ps._write_table(ps._partials_of(batch, 0))
         clear_tombstones(ps._tombstone_path())
-        ps.history = [{"v": 0, "op": "build", "add": [0], "drop": [],
-                       "reset": True}]
-        ps.cur_version = 0
-        ps.sealed_version = 0
         ps._save_meta()
         return ps
 
-    @classmethod
-    def open(cls, catalog, name: str) -> "ProfileStore":
-        with open(os.path.join(
-                catalog.root, f"{name}_profilestore_meta.json")) as f:
-            m = json.load(f)
-        ps = cls(catalog, name, m["columns"], m["kinds"],
-                 m.get("ndv_lgk", 16), m.get("num_buckets", 4),
-                 pctl_k=m.get("pctl_k"))
-        ps.cur_gen = m.get("cur_gen", 0)
-        ps.sealed_below = m.get("sealed_below", 0)
-        ps.corrected = m.get("corrected", {})
-        ps.history = m.get("history")
-        ps.cur_version = m.get("cur_version", 0)
-        ps.sealed_version = m.get("sealed_version", 0)
-        return ps
-
-    def _ensure_registered(self) -> None:
-        if not self.catalog.spark.catalog.tableExists(self.sql_name):
-            self.catalog._attach_bucketed(
-                self.sql_name,
-                os.path.join(self.catalog.root, self.table_name, "data"),
-                "col_name", ["col_name"], self.num_buckets,
-            )
-
     @property
     def partials(self) -> DataFrame:
-        """Stored partials, tombstoned generations included (refresh at
-        every read entry — the repo's table-cache trap)."""
-        self._ensure_registered()
-        self.catalog.spark.catalog.refreshTable(self.sql_name)
-        return self.catalog.spark.table(self.sql_name)
+        """Stored partials, tombstoned generations included (refreshed
+        at every read entry)."""
+        return self._raw()
 
     def live_partials(self) -> DataFrame:
-        from hindex_spark.operators.artifact import live_view
-
-        return live_view(self.partials, "gen", self.catalog.spark,
-                         self._tombstone_path())
+        return self._live(self.partials, "gen")
 
     def _check_batch(self, batch: DataFrame) -> None:
         dtypes = dict(batch.dtypes)
@@ -618,80 +526,14 @@ class ProfileStore:
                     f"batch={k!r} ({dtypes[c]}) — typed min/max and "
                     "sketch value spaces must not mix")
 
-    def _append_locked(self, batch: DataFrame, gen: int) -> None:
-        self._check_batch(batch)
-        rows = profile_partials(batch, self.columns, self.ndv_lgk,
+    def _partials_of(self, batch: DataFrame, gen: int) -> DataFrame:
+        return profile_partials(batch, self.columns, self.ndv_lgk,
                                 pctl_k=self.pctl_k
                                 ).withColumn("gen", F.lit(gen).cast("long"))
-        view = f"__profilestore_append_{self.name}"
-        sess = rows.sparkSession  # foreachBatch session clone
-        rows.createOrReplaceTempView(view)
-        sess.sql(f"INSERT INTO {self.sql_name} SELECT * FROM {view}")
-        sess.catalog.dropTempView(view)
-        self.catalog.spark.catalog.refreshTable(self.sql_name)
 
-    def update(self, batch: DataFrame) -> int:
-        """Append one batch's profile partials as a new generation and
-        return it (the handle corrections cut by)."""
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            gen = self.cur_gen + 1
-            self._append_locked(batch, gen)
-            self.cur_gen = gen
-            self._record_version("update", add=[gen])
-            self._save_meta()
-        return gen
-
-    def _check_correctable(self, gen: int) -> None:
-        if gen < self.sealed_below:
-            raise ValueError(
-                f"generation {gen} was folded by compact() (sealed below "
-                f"{self.sealed_below}); its batch identity is gone")
-        if gen > self.cur_gen:
-            raise ValueError(
-                f"generation {gen} does not exist (cur_gen={self.cur_gen})")
-        prior = self.corrected.get(str(gen), "__absent__")
-        if prior is None:
-            raise ValueError(
-                f"generation {gen} was already retracted by delete_batch")
-        if prior != "__absent__":
-            raise ValueError(
-                f"generation {gen} was already superseded by generation "
-                f"{prior}; correct generation {prior} instead")
-
-    def replace_batch(self, gen: int, corrected: DataFrame) -> int:
-        """Supersede generation ``gen``'s partials with the corrected
-        batch's — one tombstone append + one batch-sized INSERT."""
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            self._check_correctable(gen)
-            new_gen = self.cur_gen + 1
-            gens = self.catalog.spark.createDataFrame([(gen,)], "gen long")
-            append_tombstones(gens, "gen", gen + 1, self._tombstone_path())
-            self._append_locked(corrected, new_gen)
-            self.cur_gen = new_gen
-            self.corrected[str(gen)] = new_gen
-            self._record_version("replace", add=[new_gen], drop=[gen])
-            self._save_meta()
-        return new_gen
-
-    def delete_batch(self, gen: int) -> None:
-        """Retract a batch's contribution entirely."""
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            self._check_correctable(gen)
-            gens = self.catalog.spark.createDataFrame([(gen,)], "gen long")
-            append_tombstones(gens, "gen", gen + 1, self._tombstone_path())
-            self.corrected[str(gen)] = None
-            self._record_version("delete", drop=[gen])
-            self._save_meta()
+    def _append_locked(self, batch: DataFrame, gen: int) -> None:
+        self._check_batch(batch)
+        self._insert(self._partials_of(batch, gen))
 
     def compact(self) -> None:
         """Fold live partials to ONE row per column at gen ``cur_gen``
@@ -699,15 +541,12 @@ class ProfileStore:
         tombstones. The store is columns-x-generations tiny, so this is
         a trivially cheap job; it exists so a years-running store's
         read merges a bounded frame."""
-        from hindex_spark.operators.artifact import clear_tombstones, live_view
-        from hindex_spark.table import Table
-
         with self.catalog.write_lock(self.table_name):
             self._reload_meta()
-            # Pre-rewrite meta commit — RollupStore.compact's two-step
-            # ordering. The folded rows take a FRESH generation so a
-            # tombstone pending at a crash (cuts reference strictly
-            # older gens) re-applies to them as a no-op. A crash between
+            # Pre-rewrite meta commit. The folded rows take a FRESH
+            # generation so a tombstone pending at a crash (cuts
+            # reference strictly older gens) re-applies to them as a
+            # no-op. A crash between
             # this commit and the rewrite leaves: dead rows still
             # tombstone-filtered on reads, historical versions refused
             # (sealed) rather than reconstructed from rows the restarted
@@ -718,80 +557,24 @@ class ProfileStore:
             self.corrected = {}
             self._record_version("compact", add=[new_gen], seal=True)
             self._save_meta()
-            rows = live_view(
-                self.catalog.read_raw(self.table_name), "gen",
-                self.catalog.spark, self._tombstone_path(),
-            )
-            folded = merge_profile_partials(rows.drop("gen")).withColumn(
-                "gen", F.lit(new_gen).cast("long"))
-            self.catalog.save_bucketed(
-                Table(folded, "col_name", f"{self.name}_profilestore"),
-                num_buckets=self.num_buckets,
+            rows = self._live(self.catalog.read_raw(self.table_name), "gen")
+            self._write_table(
+                merge_profile_partials(rows.drop("gen")).withColumn(
+                    "gen", F.lit(new_gen).cast("long"))
             )
             clear_tombstones(self._tombstone_path())
-
-    def _record_version(self, op: str, add=(), drop=(),
-                        seal: bool = False) -> None:
-        """Append one verb to the version history (caller holds the
-        lease and saves meta afterwards) — the RollupStore mechanism
-        verbatim; pre-history stores stay history-less."""
-        if self.history is None:
-            return
-        self.cur_version += 1
-        self.history.append({
-            "v": self.cur_version, "op": op,
-            "add": [int(g) for g in add], "drop": [int(g) for g in drop],
-        })
-        if seal:
-            self.sealed_version = self.cur_version
-
-    def _live_gens_at(self, version: int) -> set:
-        """Tolerant replay (see RollupStore._live_gens_at): compact's
-        folded gen ADDs without clearing — pre-fold and folded rows are
-        disjoint alternatives carrying identical merged values."""
-        live = set()
-        for ev in self.history:
-            if ev["v"] > version:
-                break
-            live |= set(ev["add"])
-            live -= set(ev["drop"])
-        return live
-
-    def versions(self) -> list:
-        """DESCRIBE HISTORY: one entry per mutating verb, oldest
-        first."""
-        return list(self.history or [])
 
     def read_asof(self, version: int,
                   pctls: Optional[List[float]] = None) -> DataFrame:
         """TIME TRAVEL: the whole-corpus profile exactly as ``read()``
         served it at store version ``version`` — a generation-set scan
         filter replayed from meta, zero extra jobs; versions below the
-        last compact() are refused (the VACUUM rule). The third store
-        with this surface (RollupStore, JoinView)."""
-        self._reload_meta()
-        if self.history is None:
-            raise ValueError(
-                f"profile store {self.name} predates version history; "
-                "rebuild it to enable time travel")
-        if version > self.cur_version:
-            raise ValueError(
-                f"version {version} does not exist (cur_version="
-                f"{self.cur_version})")
-        if version < self.sealed_version:
-            sealing = next(
-                ev for ev in self.history if ev["v"] == self.sealed_version)
-            raise ValueError(
-                f"version {version} was sealed by {sealing['op']}() at "
-                f"version {self.sealed_version}: the rewrite purged rows "
-                "its reconstruction needs")
+        last compact() are refused (the VACUUM rule)."""
+        p = self._partials_asof(version, "profile store")
         if pctls and self.pctl_k is None:
             raise ValueError(
                 "store carries no quantile sketches — rebuild with "
                 "pctl_k to serve percentiles")
-        live = self._live_gens_at(version)
-        p = self.partials.filter(
-            F.col("gen").isin([int(g) for g in sorted(live)]))
         return render_profile(
             merge_profile_partials(p.drop("gen")), self.kinds, pctls)
 

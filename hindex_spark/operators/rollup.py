@@ -3,7 +3,7 @@ aggregate" shape: a persisted, append-maintained materialization of
 per-(time bucket, key) aggregates over an event stream, queryable
 without rescanning raw events.
 
-Design (the DedupState / SearchIndex artifact pattern):
+Design (the artifact-store pattern, operators/artifact.py):
 
 - The store holds MERGEABLE PARTIAL aggregates: (bucket_us, key, cnt,
   vsum, vmin, vmax). ``update(batch)`` aggregates ONLY the batch to the
@@ -16,8 +16,9 @@ Design (the DedupState / SearchIndex artifact pattern):
   on bucket_us satisfies the (bucket_us, key) clustering the merge
   groupBy needs — the store-side merge runs WITHOUT an Exchange.
 - ``compact()`` folds accumulated partials back to one row per
-  (bucket, key) and one file per bucket (same staged-swap machinery and
-  the same raw-parquet-source caveat as SearchIndex.compact).
+  (bucket, key) and one file per bucket (the staged-swap rewrite and
+  raw-parquet source of every artifact compaction —
+  operators/artifact.py).
 - ``ndv_col``/``pctl_col``/``topk_col`` add MERGEABLE sketch aggregates
   (DataSketches HLL distinct counts; KLL quantiles; frequent-items
   heavy hitters): the classic rollup metrics plain partials cannot
@@ -49,13 +50,13 @@ oracle as ``(epoch_us(ts) // grain) * grain``.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hindex_spark.operators.artifact import GenerationStore, clear_tombstones
 from hindex_spark.timeutil import ts_micros
 
 #: fixed-point scale for the value sum (importance.py convention)
@@ -161,7 +162,7 @@ def merge_partials(partials: DataFrame, key_cols: List[str]) -> DataFrame:
     return partials.groupBy("bucket_us", *key_cols).agg(*aggs)
 
 
-class RollupStore:
+class RollupStore(GenerationStore):
     """Persisted continuous aggregate inside a ``Catalog``.
 
     Lifecycle::
@@ -172,46 +173,39 @@ class RollupStore:
         hourly = r.read()            # merged rollup, store-side
                                      # exchange-free
         r.compact()                  # fold partials, 1 file/bucket
+
+    Late events are fine: they land as another partial row in their
+    (old) bucket and merge at read time.
     """
 
-    def __init__(self, catalog, name: str, ts_col: str,
-                 key_cols: List[str], value_col: str, grain_us: int,
-                 num_buckets: int = 32, ndv_col: Optional[str] = None,
-                 ndv_lgk: int = 12, pctl_col: Optional[str] = None,
-                 pctl_k: int = 200, topk_col: Optional[str] = None,
-                 topk_max: int = 10000):
+    kind = "rollup"
+    bucket_col = "bucket_us"
+
+    def _meta(self) -> dict:
+        return {**super()._meta(), "ts_col": self.ts_col,
+                "key_cols": self.key_cols, "value_col": self.value_col,
+                "grain_us": self.grain_us,
+                "gen_hist": self.gen_hist,
+                "hist_disabled": self.hist_disabled,
+                "ndv_col": self.ndv_col, "ndv_lgk": self.ndv_lgk,
+                "pctl_col": self.pctl_col, "pctl_k": self.pctl_k,
+                "topk_col": self.topk_col, "topk_max": self.topk_max}
+
+    def _load_meta(self, m: dict) -> None:
+        super()._load_meta(m)
+        self.ts_col = m["ts_col"]
+        self.key_cols = list(m["key_cols"])
+        self.value_col = m["value_col"]
+        self.grain_us = m["grain_us"]
         #: mergeable sketch columns (HLL distinct counts, KLL
         #: quantiles, frequent-items heavy hitters) — part of the
         #: artifact identity, like the LSH family on DedupState
-        self.ndv_col = ndv_col
-        self.ndv_lgk = ndv_lgk
-        self.pctl_col = pctl_col
-        self.pctl_k = pctl_k
-        self.topk_col = topk_col
-        self.topk_max = topk_max
-        self.num_buckets = num_buckets
-        self.catalog = catalog
-        self.name = name
-        self.ts_col = ts_col
-        self.key_cols = list(key_cols)
-        self.value_col = value_col
-        self.grain_us = grain_us
-        self.table_name = f"{name}_rollup_bucketed"
-        #: batch generation counter (build = 0, each update/replace
-        #: bumps); what replace_batch/delete_batch tombstones cut on
-        self.cur_gen = 0
-        #: generations below this were folded together by compact() —
-        #: their batch identity is gone, corrections must refuse
-        self.sealed_below = 0
-        #: correction chain: str(gen) -> superseding generation (None =
-        #: retracted by delete_batch). A second correction of the same
-        #: generation must target the SUPERSEDING gen — tombstoning the
-        #: already-dead original would leave BOTH corrections live and
-        #: silently double-count — so replace_batch/delete_batch refuse
-        #: already-corrected targets by consulting this map. Persisted
-        #: in meta (survives expire(), which keeps generations); cleared
-        #: by compact() (sealed_below then covers those gens).
-        self.corrected = {}
+        self.ndv_col = m.get("ndv_col")
+        self.ndv_lgk = m.get("ndv_lgk", 12)
+        self.pctl_col = m.get("pctl_col")
+        self.pctl_k = m.get("pctl_k", 200)
+        self.topk_col = m.get("topk_col")
+        self.topk_max = m.get("topk_max", 10000)
         #: write-maintained bucket histogram: str(gen) ->
         #: {str(bucket_us): live partial rows}. Maintained under the
         #: writer lease by every mutating verb, so
@@ -225,37 +219,12 @@ class RollupStore:
         #: off and auto-reads use the gauge — see ``_hist_commit``).
         #: ADVISORY only: the spread decision is result-identical
         #: either way, so a stale histogram can never corrupt a read.
-        self.gen_hist = None
+        self.gen_hist = m.get("gen_hist")
         #: True once the histogram exceeded MAX_HIST_ENTRIES: verbs
         #: stop maintaining it (no rebuild flip-flop) and auto-reads
         #: fall back to the gauge; build()/compact() re-evaluate, so a
         #: fold that fits the cap re-enables maintenance.
-        self.hist_disabled = False
-        #: version history for time travel (``read_asof``): one entry
-        #: per mutating verb, ``{"v", "op", "add", "drop", "reset"}`` —
-        #: replaying add/drop (reset = start over, compact's fold)
-        #: yields the live generation set at any version. Appended
-        #: under the writer lease; None on stores written before
-        #: versions existed (read_asof refuses those — the history
-        #: cannot be reconstructed retroactively).
-        self.history = None
-        #: monotonically increasing store version (build = 0; every
-        #: mutating verb bumps it)
-        self.cur_version = 0
-        #: versions strictly below this are unreadable: a physical
-        #: rewrite (compact/expire) purged rows their reconstruction
-        #: needs — the Delta-Lake VACUUM rule applied to generations
-        self.sealed_version = 0
-
-    @property
-    def sql_name(self) -> str:
-        """Root-tagged session registration name (``table_name`` is the
-        catalog-root-relative directory; session SQL names are global,
-        so they carry the root tag — see Catalog.bucketed_sql_name)."""
-        return self.catalog.bucketed_sql_name(self.table_name)
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.catalog.root, f"{self.name}_rollup_meta.json")
+        self.hist_disabled = m.get("hist_disabled", False)
 
     @classmethod
     def build(cls, catalog, events: DataFrame, ts_col: str,
@@ -267,121 +236,32 @@ class RollupStore:
               pctl_k: int = 200,
               topk_col: Optional[str] = None,
               topk_max: int = 10000) -> "RollupStore":
-        from hindex_spark.operators.artifact import clear_tombstones
-        from hindex_spark.table import Table
-
-        r = cls(catalog, name, ts_col, key_cols, value_col, grain_us,
-                num_buckets=num_buckets, ndv_col=ndv_col, ndv_lgk=ndv_lgk,
-                pctl_col=pctl_col, pctl_k=pctl_k,
-                topk_col=topk_col, topk_max=topk_max)
-        rows = rollup_partials(
-            events, ts_col, key_cols, value_col, grain_us,
-            ndv_col=ndv_col, ndv_lgk=ndv_lgk,
-            pctl_col=pctl_col, pctl_k=pctl_k,
-            topk_col=topk_col, topk_max=topk_max,
-        ).withColumn("gen", F.lit(0).cast("long"))
-        catalog.save_bucketed(
-            Table(rows, "bucket_us", f"{name}_rollup"), num_buckets=num_buckets
-        )
+        r = cls(catalog, name, {
+            "ts_col": ts_col, "key_cols": list(key_cols),
+            "value_col": value_col, "grain_us": grain_us,
+            "num_buckets": num_buckets, "ndv_col": ndv_col,
+            "ndv_lgk": ndv_lgk, "pctl_col": pctl_col, "pctl_k": pctl_k,
+            "topk_col": topk_col, "topk_max": topk_max,
+            "history": [{"v": 0, "op": "build", "add": [0], "drop": [],
+                         "reset": True}],
+        })
+        r._write_table(r._partials_of(events, 0))
         # a REBUILD starts at gen 0: clear the previous incarnation's
         # tombstones or they'd kill matching fresh generations
         clear_tombstones(r._tombstone_path())
-        r.cur_gen = 0
-        r.sealed_below = 0
-        r.history = [{"v": 0, "op": "build", "add": [0], "drop": [],
-                      "reset": True}]
-        r.cur_version = 0
-        r.sealed_version = 0
         # seed the bucket histogram from the saved (aggregate-sized)
         # table — one bounded job at build time buys every later
         # auto-read its spread decision for free
         r.gen_hist = {"0": r._hist_of(catalog.read_raw(r.table_name))}
         r._hist_commit(reevaluate=True)
-        with open(r._meta_path(), "w") as f:
-            json.dump(r._meta(), f)
+        r._save_meta()
         return r
-
-    def _meta(self) -> dict:
-        return {"ts_col": self.ts_col, "key_cols": self.key_cols,
-                "value_col": self.value_col, "grain_us": self.grain_us,
-                "num_buckets": self.num_buckets, "cur_gen": self.cur_gen,
-                "sealed_below": self.sealed_below,
-                "corrected": self.corrected,
-                "gen_hist": self.gen_hist,
-                "hist_disabled": self.hist_disabled,
-                "ndv_col": self.ndv_col, "ndv_lgk": self.ndv_lgk,
-                "pctl_col": self.pctl_col, "pctl_k": self.pctl_k,
-                "topk_col": self.topk_col, "topk_max": self.topk_max,
-                "history": self.history, "cur_version": self.cur_version,
-                "sealed_version": self.sealed_version}
-
-    def _reload_meta(self) -> None:
-        """Re-read the persisted meta into this handle — MUST run at
-        the top of every locked mutation: another process may have
-        bumped the generation since open/build, and a delta applied to
-        a stale baseline silently loses its update (the cross-process
-        lost-update pattern the other stores guard against)."""
-        with open(self._meta_path()) as f:
-            m = json.load(f)
-        self.num_buckets = m.get("num_buckets", 32)
-        self.cur_gen = m.get("cur_gen", 0)
-        self.sealed_below = m.get("sealed_below", 0)
-        self.corrected = m.get("corrected", {})
-        self.gen_hist = m.get("gen_hist")
-        self.hist_disabled = m.get("hist_disabled", False)
-        self.history = m.get("history")
-        self.cur_version = m.get("cur_version", 0)
-        self.sealed_version = m.get("sealed_version", 0)
-
-    def _tombstone_path(self) -> str:
-        from hindex_spark.operators.artifact import tombstone_path
-
-        return tombstone_path(self.catalog.root, self.table_name)
-
-    @classmethod
-    def open(cls, catalog, name: str) -> "RollupStore":
-        with open(os.path.join(catalog.root, f"{name}_rollup_meta.json")) as f:
-            m = json.load(f)
-        r = cls(catalog, name, m["ts_col"], m["key_cols"],
-                m["value_col"], m["grain_us"],
-                num_buckets=m.get("num_buckets", 32),
-                ndv_col=m.get("ndv_col"), ndv_lgk=m.get("ndv_lgk", 12),
-                pctl_col=m.get("pctl_col"), pctl_k=m.get("pctl_k", 200),
-                topk_col=m.get("topk_col"),
-                topk_max=m.get("topk_max", 10000))
-        r.cur_gen = m.get("cur_gen", 0)
-        r.sealed_below = m.get("sealed_below", 0)
-        r.corrected = m.get("corrected", {})
-        r.gen_hist = m.get("gen_hist")
-        r.hist_disabled = m.get("hist_disabled", False)
-        r.history = m.get("history")
-        r.cur_version = m.get("cur_version", 0)
-        r.sealed_version = m.get("sealed_version", 0)
-        return r
-
-    def _ensure_registered(self) -> None:
-        """Re-attach the session-scoped bucketed registration on a
-        fresh SparkSession. tableExists, never a resolve (see
-        SearchIndex.update: a resolve primes a file-listing cache that
-        a later clone-session INSERT silently misses)."""
-        if not self.catalog.spark.catalog.tableExists(self.sql_name):
-            self.catalog._attach_bucketed(
-                self.sql_name,
-                os.path.join(self.catalog.root, self.table_name, "data"),
-                "bucket_us", ["bucket_us"], self.num_buckets,
-            )
 
     @property
     def partials(self) -> DataFrame:
-        """The partials table (self-repairing registration). Refreshed
-        at EVERY read entry: any earlier resolve of this name primes the
-        session's file-listing cache, and an INSERT from another process
-        (or a foreachBatch session clone) between that resolve and this
-        read would otherwise be silently invisible — the repo's
-        documented table-cache trap, closed here by construction."""
-        self._ensure_registered()
-        self.catalog.spark.catalog.refreshTable(self.sql_name)
-        return self.catalog.spark.table(self.sql_name)
+        """The partials table as stored (self-repairing registration,
+        refreshed at every read entry)."""
+        return self._raw()
 
     def _stored_has_gen(self) -> bool:
         """Whether the persisted schema carries the gen column (stores
@@ -397,126 +277,39 @@ class RollupStore:
         """One-time migration of a pre-generation store: rewrite with
         gen=0 (rollup stores are aggregate-sized, so the rewrite is
         cheap). Caller holds the writer lock."""
-        from hindex_spark.table import Table
-
         if self._stored_has_gen():
             return
-        rows = self.catalog.read_raw(self.table_name).withColumn(
+        self._write_table(self.catalog.read_raw(self.table_name).withColumn(
             "gen", F.lit(0).cast("long")
-        )
-        self.catalog.save_bucketed(
-            Table(rows, "bucket_us", f"{self.name}_rollup"),
-            num_buckets=self.num_buckets,
-        )
+        ))
 
-    def _append_locked(self, batch: DataFrame, gen: int) -> None:
-        """INSERT one batch's partials at ``gen`` (caller holds the
-        lock and has ensured registration + gen column)."""
-        rows = rollup_partials(
+    def _partials_of(self, batch: DataFrame, gen: int) -> DataFrame:
+        return rollup_partials(
             batch, self.ts_col, self.key_cols, self.value_col,
             self.grain_us, ndv_col=self.ndv_col, ndv_lgk=self.ndv_lgk,
             pctl_col=self.pctl_col, pctl_k=self.pctl_k,
             topk_col=self.topk_col, topk_max=self.topk_max,
         ).withColumn("gen", F.lit(gen).cast("long"))
-        view = f"__rollup_append_{self.name}"
-        sess = rows.sparkSession  # foreachBatch session clone, see
-        rows.createOrReplaceTempView(view)  # SearchIndex.update
-        sess.sql(f"INSERT INTO {self.sql_name} SELECT * FROM {view}")
-        sess.catalog.dropTempView(view)
-        self.catalog.spark.catalog.refreshTable(self.sql_name)
 
-    def update(self, batch: DataFrame) -> int:
-        """Append the batch's partial aggregates as a NEW generation and
-        return it — the handle a later ``replace_batch``/``delete_batch``
-        corrects by. Late events are fine — they land as another partial
-        row in their (old) bucket and merge at read time. Batch-sized
-        cost, history never rewritten."""
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            self._migrate_gen_locked()
-            gen = self.cur_gen + 1
-            self._append_locked(batch, gen)
-            if not self.hist_disabled:
-                if self.gen_hist is None:  # pre-histogram store: upgrade
-                    self._hist_rebuild_locked()
-                else:
-                    self.gen_hist[str(gen)] = self._hist_of_gen_locked(gen)
-                self._hist_commit()
-            self.cur_gen = gen
-            self._record_version("update", add=[gen])
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
-        return gen
+    def _append_locked(self, batch: DataFrame, gen: int) -> None:
+        self._insert(self._partials_of(batch, gen))
 
-    def _check_correctable(self, gen: int) -> None:
-        """Refuse targets whose batch identity is gone: folded by
-        compact() (sealed), never issued, or ALREADY corrected —
-        re-tombstoning an already-dead generation would leave both
-        correction generations live and double-count."""
-        if gen < self.sealed_below:
-            raise ValueError(
-                f"generation {gen} was folded by compact() (sealed "
-                f"below {self.sealed_below}); its batch identity is "
-                "gone — rebuild or apply a compensating batch"
-            )
-        if gen > self.cur_gen:
-            raise ValueError(
-                f"generation {gen} does not exist (cur_gen="
-                f"{self.cur_gen})"
-            )
-        prior = self.corrected.get(str(gen), "__absent__")
-        if prior is None:
-            raise ValueError(
-                f"generation {gen} was already retracted by "
-                "delete_batch; there is nothing left to correct"
-            )
-        if prior != "__absent__":
-            raise ValueError(
-                f"generation {gen} was already superseded by generation "
-                f"{prior}; correct generation {prior} instead"
-            )
-
-    def _record_version(self, op: str, add=(), drop=(),
-                        reset: bool = False, seal: bool = False) -> None:
-        """Append one verb to the version history (caller holds the
-        writer lock and commits meta afterwards). Pre-history stores
-        (``history is None``) stay history-less — a partial history
-        would reconstruct WRONG states, which is worse than refusing."""
-        if self.history is None:
+    def _gens_changed(self, add: int = None, drop: int = None) -> None:
+        """Maintain the bucket histogram: an appended generation gets
+        its own counts (one bounded aggregation), a cut one loses
+        them; a pre-histogram store is upgraded on its first append."""
+        if add is None:
+            if self.gen_hist is not None:
+                self.gen_hist.pop(str(drop), None)
             return
-        self.cur_version += 1
-        self.history.append({
-            "v": self.cur_version, "op": op,
-            "add": [int(g) for g in add], "drop": [int(g) for g in drop],
-            "reset": reset,
-        })
-        if seal:
-            self.sealed_version = self.cur_version
-
-    def _live_gens_at(self, version: int) -> set:
-        """Replay the history prefix ``v <= version`` into the set of
-        generations whose rows are live at that version. A compact
-        event's ``reset`` is deliberately NOT applied as a clear: the
-        pre-fold gens stay in the set — after a clean compact their
-        rows are gone (harmless), and after a crash between compact's
-        meta commit and its rewrite they ARE the state (the folded gen
-        has no rows yet), so the tolerant set reads correctly either
-        way. Gens dropped by replace/delete are excluded by the replay
-        itself, so the scan filter needs no tombstone join."""
-        live = set()
-        for ev in self.history:
-            if ev["v"] > version:
-                break
-            live |= set(ev["add"])
-            live -= set(ev["drop"])
-        return live
-
-    def versions(self) -> list:
-        """The store's version history (DESCRIBE HISTORY): one entry
-        per mutating verb, oldest first. Entries below
-        ``sealed_version`` are listed but no longer readable."""
-        return list(self.history or [])
+        if self.hist_disabled:
+            return
+        if self.gen_hist is None:  # pre-histogram store: upgrade
+            self._hist_rebuild_locked()
+        else:
+            self.gen_hist.pop(str(drop), None)
+            self.gen_hist[str(add)] = self._hist_of_gen_locked(add)
+        self._hist_commit()
 
     def read_asof(
         self,
@@ -539,102 +332,13 @@ class RollupStore:
         rows those versions need).
 
         ``read_asof(cur_version)`` is row-for-row ``read()``."""
-        self._reload_meta()
-        if self.history is None:
-            raise ValueError(
-                f"rollup store {self.name} predates version history; "
-                "rebuild it to enable time travel"
-            )
-        if version > self.cur_version:
-            raise ValueError(
-                f"version {version} does not exist (cur_version="
-                f"{self.cur_version})"
-            )
-        if version < self.sealed_version:
-            sealing = next(
-                ev for ev in self.history if ev["v"] == self.sealed_version
-            )
-            raise ValueError(
-                f"version {version} was sealed by {sealing['op']}() at "
-                f"version {self.sealed_version}: the rewrite purged rows "
-                "its reconstruction needs"
-            )
-        live = self._live_gens_at(version)
-        p = self.partials.filter(
-            F.col("gen").isin([int(g) for g in sorted(live)])
-        )
+        p = self._partials_asof(version, "rollup store")
         if start_us is not None:
             p = p.filter(F.col("bucket_us") >= start_us)
         if end_us is not None:
             p = p.filter(F.col("bucket_us") < end_us)
         p = self._maybe_spread(p, spread_keys, start_us, end_us)
         return self._finish(merge_partials(p, self.key_cols), pctls, topk)
-
-    def replace_batch(self, gen: int, corrected: DataFrame) -> int:
-        """CORRECT history: supersede the partials generation ``gen``
-        (a misreported batch) with ``corrected``'s partials, without
-        rebuilding the store — the reference's cell layer corrects
-        history the same way (Delete.java:69 + Put.java:48, newest cell
-        wins). One tombstone append (kills exactly generation ``gen``
-        via the artifact machinery: id column = gen itself, cut below
-        gen+1) + one batch-sized INSERT at a new generation. Returns
-        the new generation.
-
-        Generations folded together by ``compact()`` have lost their
-        batch identity and are refused — correct those with a rebuild
-        or a compensating batch. A generation ALREADY corrected (or
-        retracted) is refused too, naming its superseding generation:
-        its rows are dead, so re-tombstoning them would leave both
-        corrections live and double-count — re-correct by targeting
-        the generation this method returned."""
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            self._migrate_gen_locked()
-            self._check_correctable(gen)
-            new_gen = self.cur_gen + 1
-            gens = self.catalog.spark.createDataFrame(
-                [(gen,)], "gen long"
-            )
-            append_tombstones(gens, "gen", gen + 1, self._tombstone_path())
-            self._append_locked(corrected, new_gen)
-            if not self.hist_disabled:
-                if self.gen_hist is None:  # pre-histogram store: upgrade
-                    self._hist_rebuild_locked()
-                else:
-                    self.gen_hist.pop(str(gen), None)
-                    self.gen_hist[str(new_gen)] = self._hist_of_gen_locked(
-                        new_gen
-                    )
-                self._hist_commit()
-            self.cur_gen = new_gen
-            self.corrected[str(gen)] = new_gen
-            self._record_version("replace", add=[new_gen], drop=[gen])
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
-        return new_gen
-
-    def delete_batch(self, gen: int) -> None:
-        """Retract a batch entirely: tombstone its generation, nothing
-        rewritten until ``compact()``. Same sealing rule as
-        ``replace_batch``."""
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._ensure_registered()
-            self._migrate_gen_locked()
-            self._check_correctable(gen)
-            gens = self.catalog.spark.createDataFrame([(gen,)], "gen long")
-            append_tombstones(gens, "gen", gen + 1, self._tombstone_path())
-            self.corrected[str(gen)] = None
-            if self.gen_hist is not None:
-                self.gen_hist.pop(str(gen), None)
-            self._record_version("delete", drop=[gen])
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
 
     #: "auto" spreads when the largest time bucket holds more than this
     #: multiple of the fair per-bucket share — below it, the
@@ -688,16 +392,11 @@ class RollupStore:
         per-generation histogram from the LIVE rows (tombstoned
         generations excluded). One bounded aggregation; from then on
         every verb maintains the histogram incrementally."""
-        from hindex_spark.operators.artifact import live_view
-
         raw = self.catalog.read_raw(self.table_name)
         if "gen" not in raw.columns:
             raw = raw.withColumn("gen", F.lit(0).cast("long"))
-        live = live_view(
-            raw, "gen", self.catalog.spark, self._tombstone_path()
-        )
         rows = (
-            live.groupBy("gen", "bucket_us")
+            self._live(raw, "gen").groupBy("gen", "bucket_us")
             .agg(F.count("*").alias("__n"))
             .collect()
         )
@@ -788,11 +487,7 @@ class RollupStore:
         material by construction; the broadcast join preserves the
         scan's bucket partitioning, so the downstream merge stays
         exchange-free."""
-        from hindex_spark.operators.artifact import live_view
-
-        p = self.partials
-        return live_view(p, "gen", self.catalog.spark,
-                         self._tombstone_path())
+        return self._live(self.partials, "gen")
 
     @staticmethod
     def _finish(merged: DataFrame, pctls=None, topk=None) -> DataFrame:
@@ -1008,9 +703,6 @@ class RollupStore:
         never seals batches — corrections stay possible afterwards;
         tombstoned rows are purged and the (re-appliable-as-no-op)
         tombstones cleared."""
-        from hindex_spark.operators.artifact import clear_tombstones, live_view
-        from hindex_spark.table import Table
-
         with self.catalog.write_lock(self.table_name):
             self._reload_meta()
             if num_buckets is None:
@@ -1027,16 +719,14 @@ class RollupStore:
             self.num_buckets = num_buckets
             self.gen_hist = None
             self._record_version("expire", seal=True)
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
+            self._save_meta()
             raw = self.catalog.read_raw(self.table_name)
             if "gen" not in raw.columns:  # migrate pre-gen stores in place
                 raw = raw.withColumn("gen", F.lit(0).cast("long"))
-            rows = live_view(
-                raw, "gen", self.catalog.spark, self._tombstone_path()
-            ).filter(F.col("bucket_us") >= F.lit(before_us))
-            self.catalog.save_bucketed(
-                Table(rows, "bucket_us", f"{self.name}_rollup"),
+            self._write_table(
+                self._live(raw, "gen").filter(
+                    F.col("bucket_us") >= F.lit(before_us)
+                ),
                 num_buckets=num_buckets,
             )
             clear_tombstones(self._tombstone_path())
@@ -1047,13 +737,12 @@ class RollupStore:
             # relied on are cleared here)
             self._hist_rebuild_locked()
             self._hist_commit(reevaluate=True)
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
+            self._save_meta()
 
     def compact(self, num_buckets: Optional[int] = None) -> None:
         """Fold accumulated LIVE partials to one row per (bucket, key)
-        and one file per bucket. Raw-parquet source for the same reason
-        as SearchIndex.compact (the bucketed scan's claimed partitioning
+        and one file per bucket. Raw-parquet source, as in every
+        artifact compaction (the bucketed scan's claimed partitioning
         would elide the rewrite's repartition).
 
         Folding erases batch identity: the folded rows take ONE fresh
@@ -1064,9 +753,6 @@ class RollupStore:
         never a generation collision; tombstones pending at a crash
         re-apply to the folded rows as no-ops (their cuts reference
         strictly older generations)."""
-        from hindex_spark.operators.artifact import clear_tombstones, live_view
-        from hindex_spark.table import Table
-
         with self.catalog.write_lock(self.table_name):
             self._reload_meta()
             if num_buckets is None:
@@ -1089,21 +775,14 @@ class RollupStore:
             # reconstructing from rows the restarted compact rewrites
             self._record_version("compact", add=[new_gen], reset=True,
                                  seal=True)
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
+            self._save_meta()
             raw = self.catalog.read_raw(self.table_name)
             if "gen" not in raw.columns:  # migrate pre-gen stores in place
                 raw = raw.withColumn("gen", F.lit(0).cast("long"))
-            live = live_view(
-                raw, "gen", self.catalog.spark, self._tombstone_path()
-            )
-            rows = merge_partials(live, self.key_cols).withColumn(
-                "gen", F.lit(new_gen).cast("long")
-            )
-            self.catalog.save_bucketed(
-                Table(rows, "bucket_us", f"{self.name}_rollup"),
-                num_buckets=num_buckets,
-            )
+            rows = merge_partials(
+                self._live(raw, "gen"), self.key_cols
+            ).withColumn("gen", F.lit(new_gen).cast("long"))
+            self._write_table(rows, num_buckets=num_buckets)
             clear_tombstones(self._tombstone_path())
             # fold complete: one fresh generation, one bounded count
             self.gen_hist = {
@@ -1112,5 +791,4 @@ class RollupStore:
                 )
             }
             self._hist_commit(reevaluate=True)
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
+            self._save_meta()

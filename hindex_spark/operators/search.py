@@ -39,6 +39,7 @@ from typing import List
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hindex_spark.operators.artifact import KeyedStore, clear_tombstones
 from hindex_spark.operators.text import tokens
 
 #: fixed-point scale shared with importance.py
@@ -229,14 +230,14 @@ def tfidf_keywords(
 # ---------------------------------------------------------------------------
 
 
-class SearchIndex:
+class SearchIndex(KeyedStore):
     """Persisted inverted index for BM25 retrieval — the secondary-index
     design of this engine (catalog-bucketed, query-key-local) applied to
     lexical search. ``bm25_topk`` scans every document for every query;
     at 100 TB a 3-term query must not read 100 TB. The index persists
-    ONE postings table — (token, id, tf, dl), bucketed AND sorted on
-    token — so a query reads only its terms' postings: bucket pruning
-    keeps all other buckets unread (plan-asserted via
+    ONE postings table — (token, id, tf, dl, positions, gen), bucketed
+    AND sorted on token — so a query reads only its terms' postings:
+    bucket pruning keeps all other buckets unread (plan-asserted via
     SelectedBucketsCount) and the within-bucket token sort gives
     parquet row-group pruning on top.
 
@@ -248,7 +249,14 @@ class SearchIndex:
     contribute an exact decimal zero. Gated against the same oracle SQL
     as the scan path.
 
-    Lifecycle (the DedupState pattern)::
+    The corpus stats follow every mutation: ``update``/``upsert`` add
+    the batch's, ``upsert``/``delete`` first take out the replaced
+    docs' live ones. Postings are appended before the meta commit, so
+    a crash between the two leaves stats stale (scores slightly off,
+    queries still correct in shape) — ``repair_stats()`` recomputes
+    them exactly from the postings.
+
+    Lifecycle::
 
         ix = SearchIndex.build(cat, docs, "doc_id", "text", "docs")
         hits = ix.topk("spark merge vector", k=25)
@@ -256,39 +264,18 @@ class SearchIndex:
         ix = SearchIndex.open(cat, "docs")   # next session
     """
 
-    def __init__(self, catalog, name: str, id_col: str, text_col: str,
-                 n_docs: int, sum_dl: float, num_buckets: int = 32,
-                 cur_gen: int = 0):
-        self.catalog = catalog
-        self.name = name
-        self.id_col = id_col
-        self.text_col = text_col
-        self.n_docs = n_docs
-        self.sum_dl = sum_dl
-        self.num_buckets = num_buckets
-        self.cur_gen = cur_gen
-        self.table_name = f"{name}_postings_bucketed"
-
-    @property
-    def sql_name(self) -> str:
-        """Root-tagged session registration name (``table_name`` is the
-        catalog-root-relative directory; session SQL names are global —
-        Catalog.bucketed_sql_name)."""
-        return self.catalog.bucketed_sql_name(self.table_name)
+    kind = "postings"
+    bucket_col = "token"
 
     def _meta(self) -> dict:
-        return {"id_col": self.id_col, "text_col": self.text_col,
-                "n_docs": self.n_docs, "sum_dl": self.sum_dl,
-                "num_buckets": self.num_buckets, "cur_gen": self.cur_gen}
+        return {**super()._meta(), "text_col": self.text_col,
+                "n_docs": self.n_docs, "sum_dl": self.sum_dl}
 
-    # -- storage ------------------------------------------------------------
-
-    def _meta_path(self) -> str:
-        import os
-
-        return os.path.join(
-            self.catalog.root, f"{self.name}_postings_meta.json"
-        )
+    def _load_meta(self, m: dict) -> None:
+        super()._load_meta(m)
+        self.text_col = m["text_col"]
+        self.n_docs = m["n_docs"]
+        self.sum_dl = m["sum_dl"]
 
     @staticmethod
     def _posting_rows(docs: DataFrame, id_col: str, text_col: str,
@@ -322,6 +309,21 @@ class SearchIndex:
             .withColumn("gen", F.lit(gen).cast("long"))
         )
 
+    def _batch_stats(self, docs: DataFrame):
+        """(doc count, total token count) of a batch — one bounded
+        aggregate."""
+        row = (
+            docs.filter(F.col(self.text_col).isNotNull())
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(F.size(tokens(F.col(self.text_col))))
+                .cast("double")
+                .alias("sumdl"),
+            )
+            .collect()[0]
+        )
+        return int(row["n"]), float(row["sumdl"] or 0.0)
+
     @classmethod
     def build(cls, catalog, docs: DataFrame, id_col: str, text_col: str,
               name: str, num_buckets: int = 32) -> "SearchIndex":
@@ -329,106 +331,32 @@ class SearchIndex:
         bucketed/sorted on token. Postings are ~tens of bytes per (doc,
         distinct token) — the artifact a 100 TB corpus amortizes over
         every query ever run against it."""
-        import json
-
-        from hindex_spark.table import Table
-
-        toked = docs.filter(F.col(text_col).isNotNull()).select(
-            tokens(F.col(text_col)).alias("__toks")
-        )
-        stats = toked.agg(
-            F.count("*").alias("n"),
-            F.sum(F.size("__toks")).cast("double").alias("sumdl"),
-        ).collect()[0]
-        rows = cls._posting_rows(docs, id_col, text_col)
-        catalog.save_bucketed(
-            Table(rows, "token", f"{name}_postings"), num_buckets=num_buckets
-        )
+        ix = cls(catalog, name, {"id_col": id_col, "text_col": text_col,
+                                 "n_docs": 0, "sum_dl": 0.0,
+                                 "num_buckets": num_buckets, "cur_gen": 0})
+        ix.n_docs, ix.sum_dl = ix._batch_stats(docs)
+        ix._write_table(cls._posting_rows(docs, id_col, text_col))
         # a REBUILD under an existing name starts at gen 0 — tombstones
         # from the previous incarnation (below_gen >= 1) would silently
         # kill every fresh row
-        from hindex_spark.operators.artifact import clear_tombstones, tombstone_path
-
-        clear_tombstones(tombstone_path(catalog.root, f"{name}_postings_bucketed"))
-        ix = cls(catalog, name, id_col, text_col,
-                 int(stats["n"]), float(stats["sumdl"] or 0.0),
-                 num_buckets=num_buckets)
-        catalog.save_bucketed(
-            Table(ix._doclen_rows(docs, 0), id_col, f"{name}_doclen"),
-            num_buckets=num_buckets,
-        )
-        with open(ix._meta_path(), "w") as f:
-            json.dump(ix._meta(), f)
+        clear_tombstones(ix._tombstone_path())
+        ix._write_table(ix._doclen_rows(docs, 0), ix.doclen_table_name,
+                        id_col)
+        ix._save_meta()
         return ix
-
-    @classmethod
-    def open(cls, catalog, name: str) -> "SearchIndex":
-        import json
-        import os
-
-        with open(os.path.join(
-                catalog.root, f"{name}_postings_meta.json")) as f:
-            m = json.load(f)
-        return cls(catalog, name, m["id_col"], m["text_col"],
-                   m["n_docs"], m["sum_dl"],
-                   num_buckets=m.get("num_buckets", 32),
-                   cur_gen=m.get("cur_gen", 0))
-
-    def _ensure_registered(self) -> None:
-        """Re-attach the session-scoped bucketed registration from the
-        files + persisted num_buckets when a FRESH SparkSession opens
-        the artifact (registrations do not survive session restarts;
-        the files and meta do)."""
-        import os
-
-        if not self.catalog.spark.catalog.tableExists(self.sql_name):
-            self.catalog._attach_bucketed(
-                self.sql_name,
-                os.path.join(self.catalog.root, self.table_name, "data"),
-                "token", ["token"], self.num_buckets,
-            )
-
-    def _tombstone_path(self) -> str:
-        from hindex_spark.operators.artifact import tombstone_path
-
-        return tombstone_path(self.catalog.root, self.table_name)
-
-    @property
-    def _postings_raw(self) -> DataFrame:
-        """The postings table as stored — tombstoned generations
-        included (self-repairing registration). Refreshed at every read
-        entry: an earlier resolve primes the session's file-listing
-        cache and a cross-process/clone-session INSERT since would be
-        silently invisible (the documented table-cache trap)."""
-        self._ensure_registered()
-        self.catalog.spark.catalog.refreshTable(self.sql_name)
-        return self.catalog.spark.table(self.sql_name)
 
     @property
     def postings(self) -> DataFrame:
         """The LIVE postings: the stored table minus generations
-        superseded by ``upsert``/``delete`` tombstones
-        (operators/artifact.py — Lucene's live-docs rule). With no
-        tombstones this is the raw frame, zero overhead; with them, one
-        broadcast left join that token-bucket pruning still pushes
-        below."""
-        from hindex_spark.operators.artifact import live_view
-
-        return live_view(
-            self._postings_raw, self.id_col, self.catalog.spark,
-            self._tombstone_path(),
-        )
+        superseded by ``upsert``/``delete`` tombstones."""
+        return self._live(self._raw())
 
     def repair_stats(self) -> None:
         """Recompute the persisted corpus stats FROM the postings table
-        and rewrite the meta. ``update()`` appends postings before it
-        bumps the meta, so a crash between the two leaves stats stale
-        (scores slightly off, queries still correct in shape) — this
-        closes that window after the fact. One bounded aggregate: dl is
-        constant per doc, so (n, sumdl) come from the distinct (id, dl)
-        pairs."""
-        import json
-
+        and rewrite the meta — closes the stale-stats window a crash
+        between a postings append and its meta commit leaves. One
+        bounded aggregate: dl is constant per doc, so (n, sumdl) come
+        from the distinct (id, dl) pairs."""
         stats = (
             self.postings.select(F.col(self.id_col), "dl")
             .distinct()
@@ -440,25 +368,20 @@ class SearchIndex:
         )
         self.n_docs = int(stats["n"])
         self.sum_dl = float(stats["sumdl"] or 0.0)
-        with open(self._meta_path(), "w") as f:
-            json.dump(self._meta(), f)
+        self._save_meta()
 
     # -- doclen side table ----------------------------------------------------
     # One narrow row per LIVE doc version: (id, dl, gen), bucketed on
     # id. Exists so upsert's old-stats probe reads ~20 bytes/doc instead
-    # of the postings' row-per-(doc, token) — the documented 100 TB
-    # upsert cost, closed. Shares the postings table's tombstone set
-    # (generations are bumped identically), is appended alongside every
-    # postings INSERT, and is REBUILT FROM the postings at compact(), so
-    # a crash between the two INSERTs self-heals at the next compaction.
+    # of the postings' row-per-(doc, token). Shares the postings table's
+    # tombstone set (generations are bumped identically), is appended
+    # alongside every postings INSERT, and is REBUILT FROM the postings
+    # at compact(), so a crash between the two INSERTs self-heals at the
+    # next compaction.
 
     @property
     def doclen_table_name(self) -> str:
         return f"{self.name}_doclen_bucketed"
-
-    @property
-    def doclen_sql_name(self) -> str:
-        return self.catalog.bucketed_sql_name(self.doclen_table_name)
 
     def _doclen_rows(self, docs: DataFrame, gen: int) -> DataFrame:
         return docs.filter(F.col(self.text_col).isNotNull()).select(
@@ -474,155 +397,49 @@ class SearchIndex:
             self.catalog.root, self.doclen_table_name, "data"
         ))
 
-    def _ensure_doclen_registered(self) -> None:
-        import os
-
-        if not self.catalog.spark.catalog.tableExists(self.doclen_sql_name):
-            self.catalog._attach_bucketed(
-                self.doclen_sql_name,
-                os.path.join(self.catalog.root, self.doclen_table_name, "data"),
-                self.id_col, [self.id_col], self.num_buckets,
-            )
-
     @property
     def doclens(self) -> DataFrame:
         """LIVE (id, dl, gen) rows — same tombstone cut as postings."""
-        from hindex_spark.operators.artifact import live_view
-
-        self._ensure_doclen_registered()
-        self.catalog.spark.catalog.refreshTable(self.doclen_sql_name)
-        return live_view(
-            self.catalog.spark.table(self.doclen_sql_name),
-            self.id_col, self.catalog.spark, self._tombstone_path(),
-        )
-
-    def _append_doclens(self, docs: DataFrame, gen: int) -> None:
-        """INSERT the batch's doclen rows (caller holds the lock)."""
-        rows = self._doclen_rows(docs, gen)
-        view = f"__doclen_append_{self.name}"
-        sess = docs.sparkSession
-        self._ensure_doclen_registered()
-        rows.createOrReplaceTempView(view)
-        sess.sql(f"INSERT INTO {self.doclen_sql_name} SELECT * FROM {view}")
-        sess.catalog.dropTempView(view)
-        self.catalog.spark.catalog.refreshTable(self.doclen_sql_name)
-
-    def _reload_meta(self) -> None:
-        """Re-read the persisted meta into this handle. MUST run at the
-        top of every locked mutation: the in-memory n_docs/sum_dl/
-        cur_gen were loaded at open/build time, and another process may
-        have mutated the artifact since — applying a delta to the stale
-        baseline silently loses its update (caught by the two-process
-        chaos test). Under the writer lease the disk meta is the one
-        truth."""
-        import json
-        import os
-
-        if os.path.isfile(self._meta_path()):
-            with open(self._meta_path()) as f:
-                m = json.load(f)
-            self.n_docs = m["n_docs"]
-            self.sum_dl = m["sum_dl"]
-            self.num_buckets = m.get("num_buckets", self.num_buckets)
-            self.cur_gen = m.get("cur_gen", 0)
+        return self._live(self._raw(self.doclen_table_name, self.id_col))
 
     def _migrate_gen_locked(self) -> None:
         """One-time migration of a PRE-GENERATION store (written before
         upsert/delete existed): rewrite postings (and the doclen side
         table, if any) with gen=0 so every mutation path — positional
         INSERT INTO, tombstone cuts, compact's doclen rebuild — sees one
-        consistent schema. Caller holds the writer lock. No-op on
-        current stores (one driver-side schema probe)."""
-        if "gen" in self.catalog.read_raw(self.table_name).columns:
+        consistent schema. No-op on current stores (one driver-side
+        schema probe)."""
+        raw = self.catalog.read_raw(self.table_name)
+        if "gen" in raw.columns:
             return
-        from hindex_spark.table import Table
-
-        rows = self.catalog.read_raw(self.table_name).withColumn(
-            "gen", F.lit(0).cast("long")
-        )
-        self.catalog.save_bucketed(
-            Table(rows, "token", f"{self.name}_postings"),
-            num_buckets=self.num_buckets,
-        )
+        self._write_table(raw.withColumn("gen", F.lit(0).cast("long")))
         if self._has_doclen():
             dl = self.catalog.read_raw(self.doclen_table_name)
             if "gen" not in dl.columns:
-                self.catalog.save_bucketed(
-                    Table(
-                        dl.withColumn("gen", F.lit(0).cast("long")),
-                        self.id_col, f"{self.name}_doclen",
-                    ),
-                    num_buckets=self.num_buckets,
+                self._write_table(
+                    dl.withColumn("gen", F.lit(0).cast("long")),
+                    self.doclen_table_name, self.id_col,
                 )
 
-    def update(self, new_docs: DataFrame) -> None:
-        """Per-batch maintenance: append the batch's postings (INSERT
-        INTO honors the bucket spec) and bump the persisted corpus
-        stats. Assumes batch ids are new — re-ingesting a doc id adds,
-        not replaces, its postings (the DedupState.update contract).
-        The postings append and the meta bump are two steps; a crash
-        between them leaves stats stale — recoverable exactly with
-        ``repair_stats()`` (the meta is always derivable from the
-        postings)."""
-        import json
+    def _append_batch(self, docs: DataFrame, gen: int) -> None:
+        """Postings (and doclen rows, when the store has the side table)
+        at ``gen``, plus the batch's corpus stats."""
+        self._insert(self._posting_rows(docs, self.id_col, self.text_col,
+                                        gen))
+        if self._has_doclen():
+            self._insert(self._doclen_rows(docs, gen),
+                         self.doclen_table_name, self.id_col)
+        n, sumdl = self._batch_stats(docs)
+        self.n_docs += n
+        self.sum_dl += sumdl
 
-        view = f"__postings_append_{self.name}"
-        # run the INSERT on the batch's OWN session: inside a streaming
-        # foreachBatch the micro-batch frame lives in a session clone,
-        # and temp views are session-scoped — registering on rows'
-        # session and inserting from the catalog's would not resolve
-        sess = new_docs.sparkSession
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._migrate_gen_locked()
-            rows = self._posting_rows(
-                new_docs, self.id_col, self.text_col, gen=self.cur_gen
-            )
-            # re-attach the registration on a fresh session via
-            # tableExists — NOT by resolving the table: resolving primes
-            # the catalog session's file-listing cache BEFORE the
-            # clone-session INSERT below, and later reads then silently
-            # miss the appended files
-            self._ensure_registered()
-            rows.createOrReplaceTempView(view)
-            sess.sql(f"INSERT INTO {self.sql_name} SELECT * FROM {view}")
-            sess.catalog.dropTempView(view)
-            # the INSERT ran on the batch's session; invalidate the
-            # catalog session's cached listing so its readers see it
-            self.catalog.spark.catalog.refreshTable(self.sql_name)
-            if self._has_doclen():
-                self._append_doclens(new_docs, self.cur_gen)
-            batch = (
-                new_docs.filter(F.col(self.text_col).isNotNull())
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum(F.size(tokens(F.col(self.text_col))))
-                    .cast("double")
-                    .alias("sumdl"),
-                )
-                .collect()[0]
-            )
-            self.n_docs += int(batch["n"])
-            self.sum_dl += float(batch["sumdl"] or 0.0)
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
-
-    def _live_id_stats(self, ids: DataFrame):
-        """(count, sum dl) of the LIVE docs among ``ids`` — one bounded
-        aggregate over the postings' distinct (id, dl) pairs, restricted
-        by the broadcast id set before the distinct.
-
-        Honest 100 TB cost: the broadcast semi-join filters rows, not
-        bytes — this is a column-pruned (id, dl, gen) scan of the
-        postings per upsert batch (a few % of the index's width, paid
-        once per batch). If upserts dominate the workload, the next
-        step is a doclen side table bucketed on id (the DedupState
-        shape), which turns this into a probe of the batch's buckets."""
-        source = (
-            self.doclens if self._has_doclen() else
-            # pre-doclen store: fall back to the postings scan
-            self.postings
-        )
+    def _forget_ids(self, ids: DataFrame) -> None:
+        """Take the LIVE docs among ``ids`` out of the corpus stats —
+        one bounded aggregate over their distinct (id, dl) pairs from
+        the doclen side table (a pre-doclen store falls back to a
+        column-pruned postings scan), restricted by the broadcast id
+        set before the distinct."""
+        source = self.doclens if self._has_doclen() else self.postings
         row = (
             source.join(F.broadcast(ids), self.id_col, "left_semi")
             .select(F.col(self.id_col), "dl")
@@ -633,93 +450,19 @@ class SearchIndex:
             )
             .collect()[0]
         )
-        return int(row["n"]), float(row["sumdl"] or 0.0)
+        self.n_docs -= int(row["n"])
+        self.sum_dl -= float(row["sumdl"] or 0.0)
 
-    def upsert(self, docs: DataFrame) -> None:
-        """Replace-or-insert a batch: ids already in the index get their
-        postings superseded (a tombstone cuts every older generation —
-        including tokens the new version no longer contains), new ids
-        just append. Write order is tombstone -> postings -> meta:
-        the new rows carry ``gen == below_gen`` so the tombstone can
-        never kill them, and a crash mid-sequence leaves the doc
-        temporarily absent (a delete that hasn't re-inserted yet) —
-        re-running the upsert completes it, and ``repair_stats()``
-        rebuilds the meta from live postings. Physical purge happens at
-        the next ``compact()``."""
-        import json
-
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._migrate_gen_locked()
-            self._ensure_registered()
-            batch_ids = docs.select(self.id_col).distinct()
-            old_n, old_sumdl = self._live_id_stats(batch_ids)
-            new_gen = self.cur_gen + 1
-            if old_n:
-                # existence set from the RAW table: the tombstone write
-                # must not read the directory it appends to, and
-                # tombstoning an already-dead id is a no-op (stats came
-                # from the live view above)
-                existing = (
-                    self._postings_raw
-                    .join(F.broadcast(batch_ids), self.id_col, "left_semi")
-                    .select(self.id_col).distinct()
-                )
-                append_tombstones(
-                    existing, self.id_col, new_gen, self._tombstone_path()
-                )
-            rows = self._posting_rows(
-                docs, self.id_col, self.text_col, gen=new_gen
-            )
-            view = f"__postings_upsert_{self.name}"
-            sess = rows.sparkSession  # foreachBatch clone, see update()
-            rows.createOrReplaceTempView(view)
-            sess.sql(f"INSERT INTO {self.sql_name} SELECT * FROM {view}")
-            sess.catalog.dropTempView(view)
-            self.catalog.spark.catalog.refreshTable(self.sql_name)
-            if self._has_doclen():
-                self._append_doclens(docs, new_gen)
-            batch = (
-                docs.filter(F.col(self.text_col).isNotNull())
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum(F.size(tokens(F.col(self.text_col))))
-                    .cast("double")
-                    .alias("sumdl"),
-                )
-                .collect()[0]
-            )
-            self.cur_gen = new_gen
-            self.n_docs += int(batch["n"]) - old_n
-            self.sum_dl += float(batch["sumdl"] or 0.0) - old_sumdl
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
-
-    def delete(self, ids: DataFrame) -> None:
-        """Remove docs from the index: one tombstone append cutting
-        every current generation of the given ids, plus the stats
-        adjustment. No postings are rewritten until ``compact()``."""
-        import json
-
-        from hindex_spark.operators.artifact import append_tombstones
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._migrate_gen_locked()
-            self._ensure_registered()
-            id_set = ids.select(self.id_col).distinct()
-            old_n, old_sumdl = self._live_id_stats(id_set)
-            new_gen = self.cur_gen + 1
-            append_tombstones(
-                id_set, self.id_col, new_gen, self._tombstone_path()
-            )
-            self.cur_gen = new_gen
-            self.n_docs -= old_n
-            self.sum_dl -= old_sumdl
-            with open(self._meta_path(), "w") as f:
-                json.dump(self._meta(), f)
+    def _rebuild_sides(self, num_buckets: int) -> None:
+        """doclen rebuilt FROM the just-written purged postings (dl is
+        constant per (doc, gen)) — self-heals a crash between the
+        postings and doclen INSERTs. Re-reads the NEW files: a lazy
+        pre-rewrite frame points at data the swap already removed."""
+        purged = self.catalog.read_raw(self.table_name)
+        self._write_table(
+            purged.select(F.col(self.id_col), "dl", "gen").distinct(),
+            self.doclen_table_name, self.id_col, num_buckets,
+        )
 
     # -- the query ----------------------------------------------------------
 
@@ -872,66 +615,6 @@ class SearchIndex:
             .select(self.id_col)
             .orderBy(self.id_col)
         )
-
-    def compact(self, num_buckets: Optional[int] = None) -> None:
-        """Rewrite the postings table as one file per bucket. Every
-        ``update()`` INSERT adds a file set per bucket, and multi-file
-        buckets cost the scan its reported sort order (an extra Sort
-        before merges) plus per-file open overhead — after many daily
-        batches, compaction restores build-time layout. Runs through
-        the catalog's staged write + atomic swap, so readers never see
-        a partial rewrite.
-
-        NB: the source is read as RAW parquet, not through the
-        registered bucketed table — the bucketed scan CLAIMS the target
-        hash partitioning, which lets Catalyst elide the compaction's
-        repartition, and each of the N input tasks then writes its own
-        per-bucket files (measured: 9 files survive the 'compaction').
-        The raw read claims nothing, so the exchange really runs and
-        the write lands one file per bucket."""
-        import os
-
-        from hindex_spark.table import Table
-
-        import json
-
-        from hindex_spark.operators.artifact import clear_tombstones, live_view
-
-        with self.catalog.write_lock(self.table_name):
-            self._reload_meta()
-            self._migrate_gen_locked()
-            # None = KEEP the (just-reloaded) bucket count: a
-            # maintenance pass must never silently reset a custom layout
-            if num_buckets is None:
-                num_buckets = self.num_buckets
-            rows = self.catalog.read_raw(self.table_name)
-            # physical purge of tombstoned generations (Lucene's merge
-            # rule); gens are PRESERVED so a crash between the save and
-            # the tombstone clear re-applies the cuts as a no-op
-            rows = live_view(
-                rows, self.id_col, self.catalog.spark, self._tombstone_path()
-            )
-            self.catalog.save_bucketed(
-                Table(rows, "token", f"{self.name}_postings"),
-                num_buckets=num_buckets,
-            )
-            # doclen rebuilt FROM the just-written purged postings (dl
-            # is constant per (doc, gen)) — self-heals a crash between
-            # the postings and doclen INSERTs. MUST re-read the NEW
-            # files: the lazy pre-rewrite frame points at data the swap
-            # above already removed.
-            purged = self.catalog.read_raw(self.table_name)
-            self.catalog.save_bucketed(
-                Table(
-                    purged.select(F.col(self.id_col), "dl", "gen").distinct(),
-                    self.id_col, f"{self.name}_doclen",
-                ),
-                num_buckets=num_buckets,
-            )
-            clear_tombstones(self._tombstone_path())
-            self.num_buckets = num_buckets  # bucket count is part of the
-            with open(self._meta_path(), "w") as f:  # attach contract
-                json.dump(self._meta(), f)
 
     def tfidf_keywords(self, top_n: int = 5) -> DataFrame:
         """``tfidf_keywords`` served from the postings table — the

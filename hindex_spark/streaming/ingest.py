@@ -298,15 +298,8 @@ class StreamingIngest:
             t = t.put(puts)
         self.batches_applied += 1
         if self.checkpoint_every and self.batches_applied % self.checkpoint_every == 0:
-            t = self._checkpointed(t)
+            t = t.checkpoint(eager=True)
         self.table = t
-
-    def _checkpointed(self, t: Table) -> Table:
-        out = Table(t.df.localCheckpoint(eager=True), t.rowkey_col, t.name, t.indices)
-        out.index_tables = {
-            k: v.localCheckpoint(eager=True) for k, v in t.index_tables.items()
-        }
-        return out
 
     def start(self, stream_df: DataFrame, trigger_once: bool = True, checkpoint: str | None = None):
         """Attach to a readStream DataFrame and start folding.

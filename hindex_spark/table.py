@@ -118,9 +118,6 @@ class Table:
                     return cq.value_expr()
         return F.col(column)
 
-    def physical_name(self, column: str) -> str:
-        return column
-
     # -- index DDL (IndexMasterObserver.preCreateTable analog) --------------
 
     def create_index(self, spec: IndexSpecification, num_partitions: Optional[int] = None):
@@ -146,9 +143,9 @@ class Table:
 
     def checkpoint(self, eager: bool = True) -> "Table":
         """Truncate the mutation-chain lineage of this table (and its
-        index tables) via localCheckpoint — the batch analog of
-        StreamingIngest._checkpointed (streaming/ingest.py). Plans built
-        on the result no longer replay the whole verb chain, so planning
+        index tables) via localCheckpoint (StreamingIngest calls it every
+        ``checkpoint_every`` batches). Plans built on the result no
+        longer replay the whole verb chain, so planning
         time and repeated-subtree recomputation stay bounded for long
         interactive sequences. ``eager=False`` truncates the plan
         immediately but defers computation to the first action (pure

@@ -170,9 +170,9 @@ def test_ann_index_delete_then_compact_purges(spark, sf_dir, tmp_path):
     assert ix.vectors.count() == n - 10
     ix.compact()
     assert not os.path.isdir(ix._tombstone_path())
-    assert ix._vectors_raw.count() == n - 10
+    assert ix._raw().count() == n - 10
     # gen survives the rewrite so stale tombstones stay no-ops
-    assert "gen" in ix._vectors_raw.columns
+    assert "gen" in ix._raw().columns
 
 
 def test_ann_ivfpq_full_config_equals_brute_force(spark, sf_dir, tmp_path):

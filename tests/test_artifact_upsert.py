@@ -7,6 +7,7 @@ tombstone join)."""
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from hindex_spark.catalog import Catalog
@@ -71,11 +72,11 @@ def test_search_delete_then_compact_purges(spark, sf_dir, tmp_path):
     ix.delete(docs.filter(F.col("doc_id") < 10))
     # masked immediately, before any rewrite
     assert ix.postings.filter(F.col("doc_id") < 10).count() == 0
-    raw_before = ix._postings_raw.count()
+    raw_before = ix._raw().count()
     ix.compact()
     assert not os.path.isdir(ix._tombstone_path())
-    assert ix._postings_raw.count() < raw_before
-    assert ix._postings_raw.filter(F.col("doc_id") < 10).count() == 0
+    assert ix._raw().count() < raw_before
+    assert ix._raw().filter(F.col("doc_id") < 10).count() == 0
 
 
 def test_search_stale_tombstones_reapply_as_noop(spark, sf_dir, tmp_path):
@@ -162,7 +163,7 @@ def test_dedup_state_delete_then_compact_purges(spark, sf_dir, tmp_path):
     assert st.df.filter(F.col("doc_id") < 20).count() == 0
     st.compact()
     assert not os.path.isdir(st._tombstone_path())
-    assert st._df_raw.filter(F.col("doc_id") < 20).count() == 0
+    assert st._raw().filter(F.col("doc_id") < 20).count() == 0
 
 
 def test_dedup_state_upsert_survives_reopen(spark, sf_dir, tmp_path):
@@ -489,3 +490,116 @@ def test_maybe_compact_schedules_rollup_store(spark, sf_dir, tmp_path):
     assert r.num_buckets == 8  # maintenance never resets the layout
     assert sorted(map(tuple, r.read().collect())) == before
     assert maybe_compact(r, max_tombstoned=1) is False  # debt cleared
+
+
+def _store_cases():
+    """(build, mutate, probe) per persisted store: ``mutate`` commits
+    new metadata, ``probe`` reads the field it would change."""
+    import datetime
+
+    from hindex_spark.operators.ann_index import AnnIndex
+    from hindex_spark.operators.importance import ImportanceModel
+    from hindex_spark.operators.joinview import JoinView
+    from hindex_spark.operators.profile import ProfileStore
+    from hindex_spark.operators.rollup import HOUR_US, RollupStore
+
+    def docs(spark, lo, hi):
+        return spark.createDataFrame(
+            [(i, f"alpha beta w{i} gamma") for i in range(lo, hi)],
+            "doc_id long, text string",
+        )
+
+    def vecs(spark):
+        return spark.createDataFrame(
+            [(i, [float(i % 3), 1.0, float(i)]) for i in range(12)],
+            "vec_id long, embedding array<float>",
+        )
+
+    def events(spark, n):
+        t0 = datetime.datetime(2024, 1, 1)
+        return spark.createDataFrame(
+            [(t0 + datetime.timedelta(minutes=17 * i), f"e{i % 2}", float(i))
+             for i in range(n)],
+            "ts timestamp, event_type string, value double",
+        )
+
+    def ids(spark):
+        return spark.createDataFrame([(1,), (2,)], "id long")
+
+    return {
+        "search": (
+            lambda spark, cat: SearchIndex.build(
+                cat, docs(spark, 0, 10), "doc_id", "text", "m"),
+            lambda spark, s: s.delete(ids(spark).withColumnRenamed("id", "doc_id")),
+            lambda cat: SearchIndex.open(cat, "m").cur_gen,
+        ),
+        "dedup": (
+            lambda spark, cat: DedupState.build(
+                cat, docs(spark, 0, 10), "doc_id", "text", "m"),
+            lambda spark, s: s.delete(ids(spark).withColumnRenamed("id", "doc_id")),
+            lambda cat: DedupState.open(cat, "m").cur_gen,
+        ),
+        "ann": (
+            lambda spark, cat: AnnIndex.build(
+                cat, vecs(spark), "vec_id", "embedding", "m",
+                n_clusters=2, iters=1),
+            lambda spark, s: s.delete(ids(spark).withColumnRenamed("id", "vec_id")),
+            lambda cat: AnnIndex.open(cat, "m").cur_gen,
+        ),
+        "rollup": (
+            lambda spark, cat: RollupStore.build(
+                cat, events(spark, 8), "ts", ["event_type"], "value",
+                HOUR_US, "m", num_buckets=2),
+            lambda spark, s: s.update(events(spark, 4)),
+            lambda cat: RollupStore.open(cat, "m").cur_gen,
+        ),
+        "profile": (
+            lambda spark, cat: ProfileStore.build(
+                cat, events(spark, 8), ["event_type", "value"], "m"),
+            lambda spark, s: s.update(events(spark, 4)),
+            lambda cat: ProfileStore.open(cat, "m").cur_gen,
+        ),
+        "joinview": (
+            lambda spark, cat: JoinView.build(
+                cat, spark.createDataFrame([(1, "a")], "k long, l string"),
+                spark.createDataFrame([(1, "x")], "k long, r string"),
+                "k", "m", num_buckets=2),
+            lambda spark, s: s.update_left(
+                spark.createDataFrame([(2, "b")], "k long, l string")),
+            lambda cat: JoinView.open(cat, "m").cur_lgen,
+        ),
+        "importance": (
+            lambda spark, cat: ImportanceModel.fit(
+                cat, "m", docs(spark, 0, 5), docs(spark, 0, 10), "text",
+                n_buckets=64),
+            lambda spark, s: ImportanceModel.fit(
+                s.catalog, "m", docs(spark, 0, 5), docs(spark, 0, 10),
+                "text", n_buckets=128),
+            lambda cat: ImportanceModel.open(cat, "m").n_buckets,
+        ),
+    }
+
+
+@pytest.mark.parametrize("store", sorted(_store_cases()))
+def test_failed_meta_write_keeps_old_meta(spark, tmp_path, monkeypatch,
+                                          store):
+    """A metadata commit that dies halfway (a partial document written,
+    then an error) must leave the previous metadata loadable: the store
+    reopens at its pre-mutation state instead of a truncated file."""
+    import json
+
+    build, mutate, probe = _store_cases()[store]
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    s = build(spark, cat)
+    before = probe(cat)
+    real_dumps = json.dumps
+
+    def torn_dump(obj, fp, *args, **kwargs):
+        fp.write(real_dumps(obj)[:7])
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            mutate(spark, s)
+    assert probe(cat) == before

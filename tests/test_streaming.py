@@ -162,6 +162,25 @@ def test_changelog_emit_records_and_replay(spark, tmp_path):
     )._changelog is None
 
 
+def test_checkpointed_stream_keeps_writing_changelog(spark, tmp_path):
+    """A lineage checkpoint inside StreamingIngest must carry the
+    table's changelog: with ``checkpoint_every=1`` the first batch
+    checkpoints, and the second batch's put still lands in the log."""
+    base = spark.createDataFrame([("r1", 1)], "rowkey string, v int")
+    log = str(tmp_path / "log")
+    t = Table(base, "rowkey", "t").enable_changelog(log)
+    ingest = StreamingIngest(t, checkpoint_every=1)
+    schema = "op string, rowkey string, v int"
+    ingest.apply_batch(spark.createDataFrame([("put", "r2", 2)], schema), 0)
+    ingest.apply_batch(spark.createDataFrame([("put", "r3", 3)], schema), 1)
+
+    recs = spark.read.parquet(log).orderBy("seq").collect()
+    assert [(r["op"], r["rowkey"], r["v"]) for r in recs] == [
+        ("put", "r2", 2), ("put", "r3", 3),
+    ]
+    assert ingest.table._changelog is not None
+
+
 def test_changelog_seq_resumes_across_reattach(spark, tmp_path):
     """WAL seq ids are persistent (FSHLog): a fresh emitter attached to
     an existing log resumes from max(seq), so cross-restart replay order

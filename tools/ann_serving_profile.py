@@ -7,7 +7,7 @@ Usage:
     python tools/ann_serving_profile.py [sf_dir] [repeats]
 
 Prints one JSON line with min-of-N seconds per phase:
-    refresh      — _vectors_raw property (tableExists + refreshTable)
+    refresh      — _raw() (tableExists + refreshTable)
     centroids    — the centroid parquet read (schema + collect)
     probe_collect— _probe_frame(slim).collect()
     enrich       — _enrich_probes numpy + createDataFrame
@@ -61,7 +61,7 @@ def main():
         return round(best, 4)
 
     out = {"sf_dir": sf_dir, "n_vectors": emb.count()}
-    out["refresh"] = mn(lambda: ix._vectors_raw)
+    out["refresh"] = mn(lambda: ix._raw())
     out["centroids"] = mn(lambda: ix.centroids.collect())
     rows_holder = {}
 
