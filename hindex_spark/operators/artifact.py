@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import threading
 
@@ -148,26 +149,32 @@ def maintenance_stats(catalog, table_name: str) -> dict:
     }
 
 
-#: meta-file suffix -> artifact kind (the stores' open() entry points)
-_KINDS = {
-    "_postings_meta.json": "search_index",
-    "_dedupstate_meta.json": "dedup_state",
-    "_rollup_meta.json": "rollup_store",
-    "_annindex_meta.json": "ann_index",
-    "_importance_meta.json": "importance_model",
-}
-
-
 def list_artifacts(catalog) -> list:
     """(name, kind) of every artifact store in the catalog — the
     discovery surface ``Catalog.list_tables`` provides for tables,
-    extended to the meta-file-rooted stores. Driver-side listing
-    only."""
+    extended to the meta-file-rooted stores. A store is found by its
+    ``<name>_<cls.kind>_meta.json`` file and reported under its class
+    name in snake_case (``SearchIndex`` -> ``search_index``).
+    Driver-side listing only."""
+    # the store modules import this one, so they load at call time
+    from hindex_spark.operators.ann_index import AnnIndex  # noqa: PLC0415
+    from hindex_spark.operators.dedup_state import DedupState  # noqa: PLC0415
+    from hindex_spark.operators.importance import ImportanceModel  # noqa: PLC0415
+    from hindex_spark.operators.joinview import JoinView  # noqa: PLC0415
+    from hindex_spark.operators.profile import ProfileStore  # noqa: PLC0415
+    from hindex_spark.operators.rollup import RollupStore  # noqa: PLC0415
+    from hindex_spark.operators.search import SearchIndex  # noqa: PLC0415
+
+    kinds = {
+        f"_{cls.kind}_meta.json": re.sub(r"(?<!^)(?=[A-Z])", "_", cls.__name__).lower()
+        for cls in (SearchIndex, DedupState, RollupStore, AnnIndex,
+                    ImportanceModel, ProfileStore, JoinView)
+    }
     out = []
     if not os.path.isdir(catalog.root):
         return out
     for f in sorted(os.listdir(catalog.root)):
-        for suffix, kind in _KINDS.items():
+        for suffix, kind in kinds.items():
             if f.endswith(suffix):
                 out.append((f[: -len(suffix)], kind))
     return out

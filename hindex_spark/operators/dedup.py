@@ -14,15 +14,32 @@ Scale design (the point of each variant):
     self-join (blocked by band in production; exact here);
   * embedding cosine: blocked self-join (label/bucket) + vectorized dot.
 
-All hashes derive from md5 so the DuckDB oracle can reproduce them
-bit-for-bit: h(token) = first 15 hex digits of md5 as int, reduced mod
-MERSENNE31; minhash_i = min((A[i]*h + B[i]) mod MERSENNE31).
+The blocked searches — ``lsh_candidate_pairs``/``minhash_dedup_pairs``,
+``simhash_pairs``, ``minhash_join``, ``DedupState.dedup_batch``
+(operators/dedup_state.py) and the edit-distance linkage
+(operators/linkage.py) — share one core: block docs into buckets, cap
+hot buckets (``_valve``, the skew valve), expand the pairs inside each
+bucket (``_bucket_pairs``), then verify every pair exactly
+(``_jaccard_verify`` over unit arrays; SimHash and linkage verify their
+own distance).
+
+Two unit-hash families feed the signatures (``hash_fn``):
+  * ``md5`` — the default and the oracle family: h(unit) = first 15 hex
+    digits of md5 as int, reduced mod MERSENNE31, so the DuckDB oracle
+    reproduces every signature bit-for-bit;
+  * ``xxhash64`` — the production family: pmod(xxhash64(unit),
+    MERSENNE31), several times cheaper per unit, not reproducible in
+    ANSI SQL.
+Both feed the same affine family minhash_i = min((A[i]*h + B[i]) mod
+MERSENNE31); verification is exact under either, so the family only
+decides which candidates surface.
 """
 
 from __future__ import annotations
 
 from typing import List, Optional, Sequence, Union
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -44,8 +61,8 @@ def _spread_for_shingle(df: DataFrame, id_col: str) -> DataFrame:
     """Id-partition narrowed candidate docs BEFORE shingling: the
     candidate-doc frame inherits the raw parquet scan's partitioning,
     which at a few MB is ONE partition — then if the optimizer
-    broadcasts the (small) candidate-pair side, the array_intersect
-    work for millions of pairs lands on that single probe partition
+    broadcasts the (small) candidate-pair side, the exact-Jaccard
+    verify of millions of pairs lands on that single probe partition
     (measured 4x on the sf1 valve path: 14 s -> 3.4 s). The exchange
     moves only light (id, text) rows — the heavy unit arrays are built
     post-exchange, so the shuffle is cheap AND the shingle compute
@@ -102,21 +119,25 @@ BY_HASH = "by-hash"
 
 
 def _resolve_valve(
-    max_bucket: Union[int, None, str], hash_fn: str = "md5"
+    max_bucket: Union[int, None, str], hash_fn: str = "md5",
+    md5_cap: Optional[int] = None,
 ) -> Union[int, None, str]:
     """Map the ``"default"`` sentinel to DEFAULT_MAX_BUCKET and the
-    ``"by-hash"`` sentinel to None (md5, oracle-exact) or ``"auto"``
-    (any production hash); pass ints, ``"auto"`` (cap derived from the
+    ``"by-hash"`` sentinel to ``md5_cap`` on md5 or ``"auto"`` on any
+    production hash; pass ints, ``"auto"`` (cap derived from the
     bucket-size distribution inside the candidate pass), and the
-    explicit None (= unbounded opt-out) through unchanged."""
+    explicit None (= unbounded opt-out) through unchanged. ``md5_cap``
+    is None (unbounded, oracle-exact) for ``minhash_dedup_pairs``; the
+    production entry points (``minhash_join``, ``clean_corpus``,
+    ``DedupState.dedup_batch``) pass DEFAULT_MAX_BUCKET."""
     if max_bucket == BY_HASH:
-        return None if hash_fn == "md5" else "auto"
+        return md5_cap if hash_fn == "md5" else "auto"
     return DEFAULT_MAX_BUCKET if max_bucket == "default" else max_bucket
 
 
-#: (buckets frame, size expr name, cap) of the most recent candidate
-#: pass whose valve was active with no caller Observation — see
-#: ``last_valve_drops``. Single-writer, like the cache rotation above.
+#: (bucket-key frame, membership column, cap) of the most recent pair
+#: search whose valve was active with no caller Observation — see
+#: ``last_valve_drops``. Single-writer, like the cache rotation below.
 #: Deliberately NOT an auto-attached Observation: a fresh Observation
 #: per call makes every plan unique, which defeats sameSemantics cache
 #: reuse across repeated identical searches (measured 2.6x on the
@@ -124,35 +145,44 @@ def _resolve_valve(
 _LAST_VALVE_ACCT: Optional[tuple] = None
 
 
-def last_valve_drops() -> Optional[dict]:
-    """Dropped-bucket accounting — ``{"dropped_buckets", "dropped_docs"}``
-    (count and total membership of over-cap buckets) — for the most
-    recent pair search whose valve was active by default or explicitly,
-    with no caller-supplied ``dropped`` Observation. The default-on
-    drop must be OBSERVABLE, not silent: this runs ONE tiny aggregate
-    over the candidate pass's bucket frame (persisted in the "auto"
-    default mode, so the upstream never recomputes) on demand. Returns
-    None if no valved search ran yet."""
-    if _LAST_VALVE_ACCT is None:
-        return None
-    buckets, size_col, cap = _LAST_VALVE_ACCT
-    over = F.size(size_col) > cap
-    row = buckets.select(
+def _drop_counts(n: Column, cap: int, member_metric: str) -> List[Column]:
+    """Aggregates over a valve frame: ``dropped_buckets`` (over-cap
+    keys) and ``member_metric`` (their total membership ``n``)."""
+    over = n > cap
+    return [
         F.coalesce(F.sum(F.when(over, 1).otherwise(0)), F.lit(0)).alias(
             "dropped_buckets"
         ),
-        F.coalesce(
-            F.sum(F.when(over, F.size(size_col)).otherwise(0)), F.lit(0)
-        ).alias("dropped_docs"),
-    ).collect()[0]
-    return row.asDict()
+        F.coalesce(F.sum(F.when(over, n).otherwise(0)), F.lit(0)).alias(
+            member_metric
+        ),
+    ]
+
+
+def last_valve_drops() -> Optional[dict]:
+    """Dropped-bucket accounting — ``{"dropped_buckets", "dropped_docs"}``
+    (count and total membership of over-cap bucket keys) — for the most
+    recent pair search whose valve was active by default or explicitly,
+    with no caller-supplied ``dropped`` Observation. Self searches
+    (``minhash_dedup_pairs``, ``simhash_pairs``) count docs per bucket;
+    cross-corpus searches (``minhash_join``, ``incremental_dedup``,
+    ``DedupState.dedup_batch``) count (band, bucket) keys per side, and
+    their ``dropped_docs`` counts BAND ROWS — the ``dropped_rows`` of
+    their Observation. The default-on drop must be OBSERVABLE, not
+    silent: this runs ONE tiny aggregate over the search's bucket-key
+    frame (persisted in the "auto" mode, so the upstream never
+    recomputes) on demand. Returns None if no valved search ran yet."""
+    if _LAST_VALVE_ACCT is None:
+        return None
+    frame, n, cap = _LAST_VALVE_ACCT
+    return frame.select(*_drop_counts(n, cap, "dropped_docs")).collect()[0].asDict()
 
 #: cached intermediates (candidate pairs, narrowed unit arrays) from the
 #: most recent pair-search call — see _rotate_caches
 _LIVE_CACHES: list = []
 
-#: persists registered by INNER stages (e.g. the auto-valve bucket agg
-#: inside lsh_candidate_pairs) awaiting adoption by the enclosing pair
+#: persists registered by INNER stages (e.g. the auto-valve frame
+#: persisted by _valve) awaiting adoption by the enclosing pair
 #: search's _rotate_caches call — they must outlive the returned lazy
 #: plan, so the inner function cannot rotate itself
 _PENDING_AUX: list = []
@@ -311,8 +341,6 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact token/shingle-set Jaccard >= threshold via inverted-index
     join. Output: (id_a, id_b, jaccard) with id_a < id_b."""
-    from pyspark import StorageLevel  # noqa: PLC0415
-
     # ONE tokenize/shingle pass: the unit arrays are persisted and all
     # three consumers (both sides of the inverted-index join, the
     # per-doc set sizes) derive from the cache — unpersisted, the scan
@@ -474,6 +502,111 @@ def _band_rows(
              F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
+# ---------------------------------------------------------------------------
+# the blocking core: skew valve, in-bucket pair expansion, Jaccard verify
+# ---------------------------------------------------------------------------
+
+
+def _valve(
+    frame: DataFrame,
+    n: Column,
+    max_bucket: Union[int, str],
+    dropped: Optional[Observation] = None,
+    member_metric: str = "dropped_docs",
+):
+    """The skew valve of every blocked pair search. ``frame`` has one row
+    per bucket key and ``n`` is that key's membership; a key of n
+    members expands to ~n^2 pairs, so a key over the cap is boilerplate,
+    not near-duplication, and is cut before expansion (its members still
+    meet through their other, more selective keys).
+
+    ``max_bucket="auto"`` derives the cap from ``frame``'s own size
+    distribution — p99.9 x AUTO_VALVE_MULT, floored at AUTO_VALVE_FLOOR,
+    both read at call time — with one extra aggregation job whose
+    driver-side result is a single double. The frame is PERSISTED before
+    that job so the pipeline upstream of it runs ONCE, not once for the
+    sketch and again for the pairs (measured 3.7x on the bench's xxh
+    line without the persist); the cache is adopted by the enclosing
+    search's ``_rotate_caches``. At 100 TB run the sketch on a sample
+    via ``lsh_bucket_profile`` and pass the int.
+
+    Accounting — ``dropped_buckets`` and ``member_metric`` (count and
+    total membership of over-cap keys; ``dropped_docs`` for self
+    searches, ``dropped_rows`` for cross-corpus ones) — rides the
+    caller's ``dropped`` Observation as a side effect of the normal
+    pass, with no extra job. Without one, ``(frame, n, cap)`` is
+    recorded for ``last_valve_drops()`` instead, which keeps plans
+    Observation-free (see ``_LAST_VALVE_ACCT``).
+
+    Returns ``(kept, over)``, both lazy: the keys at or under the cap
+    (what a self search expands) and the over-cap keys (what a
+    cross-corpus search anti-joins)."""
+    if max_bucket == "auto":
+        frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
+        _register_aux_cache(frame)
+        q = frame.select(n.cast("double").alias("s")).approxQuantile(
+            "s", [0.999], 0.001
+        )
+        max_bucket = int(max(AUTO_VALVE_FLOOR, (q[0] if q else 0) * AUTO_VALVE_MULT))
+    if dropped is None:
+        global _LAST_VALVE_ACCT
+        _LAST_VALVE_ACCT = (frame, n, max_bucket)
+    else:
+        frame = frame.observe(dropped, *_drop_counts(n, max_bucket, member_metric))
+    return frame.filter(n <= max_bucket), frame.filter(n > max_bucket)
+
+
+def _bucket_pairs(buckets: DataFrame, members: str, a: str, b: str) -> DataFrame:
+    """(a, b): every pair inside each bucket's ``members`` array, the
+    element at 0-based position i paired with every later element (the
+    1-based ``slice(i+2..)`` window). TWO codegen'd Generate operators —
+    posexplode of the bucket, explode of each element's tail slice —
+    instead of one interpreted nested ``transform``: higher-order
+    lambdas evaluate interpreted per element (guide §1.2) and the
+    flattened array-of-structs materialized every bucket's full pair
+    list before the explode — pure allocation, and the measured source
+    of multi-second GC outliers on hot buckets. Here the pairs stream
+    row-at-a-time through whole-stage codegen."""
+    return buckets.select(
+        F.col(members), F.posexplode(members).alias("__i", a)
+    ).select(
+        a,
+        F.explode(
+            F.slice(
+                F.col(members),
+                F.col("__i") + 2,
+                F.greatest(F.size(members) - F.col("__i") - 1, F.lit(0)),
+            )
+        ).alias(b),
+    )
+
+
+def _jaccard_verify(
+    cands: DataFrame, ua: DataFrame, ub: DataFrame, id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs ``(id_a, id_b)``: id_a
+    joins ``ua``, id_b joins ``ub`` (both ``(id_col, units)`` unit-array
+    frames, ``doc_unit_arrays`` shape) and the pair is kept when
+    ``array_intersect`` size over union size >= ``threshold`` — the same
+    math as ``jaccard_pairs``' inverted-index join (both sides are
+    distinct unit sets) but per-pair linear work with no token-level
+    shuffle; cost ~ |candidates|, not |corpus|. Output: (id_a, id_b,
+    jaccard rounded to 6 places)."""
+    va = ua.select(F.col(id_col).alias("id_a"), F.col("units").alias("u_a"))
+    vb = ub.select(F.col(id_col).alias("id_b"), F.col("units").alias("u_b"))
+    return (
+        cands.join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn("c", F.size(F.array_intersect(F.col("u_a"), F.col("u_b"))))
+        .withColumn(
+            "jaccard", F.col("c") / (F.size("u_a") + F.size("u_b") - F.col("c"))
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
@@ -523,68 +656,9 @@ def lsh_candidate_pairs(
         .agg(F.array_sort(F.collect_set(F.col(id_col))).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    if max_bucket == "auto":
-        # Derive the cap from this corpus's own skew profile (see
-        # AUTO_VALVE_FLOOR): one extra aggregation job whose driver-side
-        # result is a single double (a quantile sketch over band-bucket
-        # sizes), then proceed exactly as a constant cap. The bucket agg
-        # is PERSISTED before the sketch action so the signature +
-        # banding pipeline upstream of it runs ONCE, not once for the
-        # sketch and again for pair expansion (measured 3.7x on the
-        # bench's xxh line without the persist); the cache is adopted
-        # by the enclosing pair search's rotation. At 100 TB run the
-        # sketch on a sample via lsh_bucket_profile and pass the int.
-        from pyspark import StorageLevel  # noqa: PLC0415
-
-        buckets = buckets.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_aux_cache(buckets)
-        q = buckets.select(F.size("ids").alias("s")).approxQuantile(
-            "s", [0.999], 0.001
-        )
-        max_bucket = int(max(AUTO_VALVE_FLOOR, (q[0] if q else 0) * AUTO_VALVE_MULT))
     if max_bucket is not None:
-        if dropped is None:
-            # valve active, no caller Observation: keep the accounting
-            # reachable for last_valve_drops() without perturbing the
-            # plan (an auto-attached Observation would make every call's
-            # plan unique and break warm cache reuse)
-            global _LAST_VALVE_ACCT
-            _LAST_VALVE_ACCT = (buckets, "ids", max_bucket)
-        if dropped is not None:
-            over = F.size("ids") > max_bucket
-            buckets = buckets.observe(
-                dropped,
-                F.coalesce(
-                    F.sum(F.when(over, 1).otherwise(0)), F.lit(0)
-                ).alias("dropped_buckets"),
-                F.coalesce(
-                    F.sum(F.when(over, F.size("ids")).otherwise(0)), F.lit(0)
-                ).alias("dropped_docs"),
-            )
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
-    # Pair expansion as TWO codegen'd Generate operators (posexplode of
-    # the bucket + explode of each element's tail slice) instead of one
-    # interpreted nested-``transform``: higher-order lambdas evaluate
-    # interpreted per element (guide §1.2) and the flattened
-    # array-of-structs materialized every bucket's full pair list
-    # before the explode — pure allocation, and the measured source of
-    # multi-second GC outliers on hot buckets. Same pair set (0-based
-    # element i pairs with every later element via the 1-based
-    # slice(i+2..) window), streamed through whole-stage codegen.
-    return (
-        buckets.select(F.col("ids"), F.posexplode("ids").alias("__i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice(
-                    F.col("ids"),
-                    F.col("__i") + 2,
-                    F.greatest(F.size("ids") - F.col("__i") - 1, F.lit(0)),
-                )
-            ).alias("id_b"),
-        )
-        .distinct()
-    )
+        buckets, _ = _valve(buckets, F.size("ids"), max_bucket, dropped)
+    return _bucket_pairs(buckets, "ids", "id_a", "id_b").distinct()
 
 
 def lsh_bucket_profile(signatures: DataFrame, id_col: str) -> DataFrame:
@@ -615,11 +689,8 @@ def minhash_dedup_pairs(
     n_hashes: int = N_HASHES,
     band_size: int = BAND_SIZE,
 ) -> DataFrame:
-    """LSH candidates verified with exact Jaccard. Verification joins the
-    (small) candidate-pair set back to the per-doc unit ARRAYS and takes
-    ``array_intersect`` sizes — identical math to the inverted-index join
-    (both sides are distinct unit sets) but per-pair linear work with no
-    token-level shuffle; cost ~ |candidates|, not |corpus|.
+    """LSH candidates verified with exact Jaccard over the per-doc unit
+    arrays (``_jaccard_verify``): cost ~ |candidates|, not |corpus|.
 
     ``hash_fn`` only affects which candidates LSH surfaces (the minhash
     family); verification is exact Jaccard either way, so reported pairs
@@ -667,18 +738,7 @@ def minhash_dedup_pairs(
         ngram,
     ).persist()
     _rotate_caches(cands, ua)
-    va = ua.select(F.col(id_col).alias("id_a"), F.col("units").alias("u_a"))
-    vb = ua.select(F.col(id_col).alias("id_b"), F.col("units").alias("u_b"))
-    return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("c", F.size(F.array_intersect(F.col("u_a"), F.col("u_b"))))
-        .withColumn(
-            "jaccard", F.col("c") / (F.size("u_a") + F.size("u_b") - F.col("c"))
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _jaccard_verify(cands, ua, ua, id_col, threshold)
 
 
 def minhash_join(
@@ -704,8 +764,8 @@ def minhash_join(
     Shape: each side gets the shuffle-free signature fold, banding is a
     narrow explode, candidates come from ONE equi-join on (band, bucket)
     — never a cross join; cost ~ sum over buckets of |L_b| x |R_b|.
-    Verification joins candidates back to the unit arrays (array_intersect
-    per pair), identical math to ``minhash_dedup_pairs``.
+    Verification is ``minhash_dedup_pairs``' exact-Jaccard verify
+    (``_jaccard_verify``).
 
     ``max_bucket`` drops (band, bucket) keys whose pair expansion exceeds
     ``max_bucket``^2 (boilerplate buckets, the skew valve at 100 TB).
@@ -720,14 +780,12 @@ def minhash_join(
     ``max_bucket=None`` explicitly for unbounded oracle-exact semantics.
     ``dropped``: optional Observation recording ``dropped_buckets`` /
     ``dropped_rows`` (over-cap (side, band, bucket) keys and their total
-    membership) as a side effect of the normal pass.
+    membership) as a side effect of the normal pass; without one,
+    ``last_valve_drops()`` reports the same numbers.
 
     Output: (id_a from left, id_b from right, jaccard >= threshold).
     """
-    if max_bucket == BY_HASH:
-        max_bucket = DEFAULT_MAX_BUCKET if hash_fn == "md5" else "auto"
-    else:
-        max_bucket = _resolve_valve(max_bucket, hash_fn)
+    max_bucket = _resolve_valve(max_bucket, hash_fn, md5_cap=DEFAULT_MAX_BUCKET)
     bl = _band_rows(
         minhash_signatures(left, id_col, text_col, ngram, hash_fn=hash_fn, n_hashes=n_hashes),
         id_col, band_size,
@@ -747,8 +805,6 @@ def minhash_join(
         # optimization guide: duplicated subtrees are hidden re-scans).
         # At extreme scale the durable answer is precomputed signatures
         # (DedupState); MEMORY_AND_DISK is the single-job equivalent.
-        from pyspark import StorageLevel  # noqa: PLC0415
-
         bl = bl.persist(StorageLevel.MEMORY_AND_DISK)
         br = br.persist(StorageLevel.MEMORY_AND_DISK)
         extra_caches += [bl, br]
@@ -760,26 +816,7 @@ def minhash_join(
                 .withColumn("__side", F.lit("R"))
             )
         )
-        if max_bucket == "auto":
-            # Same corpus-adaptive cap as lsh_candidate_pairs: p99.9 of
-            # the (side, band, bucket) sizes x AUTO_VALVE_MULT, floored.
-            # Persist the size agg before the sketch action so both
-            # signature pipelines upstream run once, not twice.
-            from pyspark import StorageLevel  # noqa: PLC0415
-
-            sizes = sizes.persist(StorageLevel.MEMORY_AND_DISK)
-            extra_caches.append(sizes)
-            q = sizes.select(F.col("__n").cast("double").alias("s")).approxQuantile(
-                "s", [0.999], 0.001
-            )
-            max_bucket = int(max(AUTO_VALVE_FLOOR, (q[0] if q else 0) * AUTO_VALVE_MULT))
-        big = sizes.filter(F.col("__n") > max_bucket)
-        if dropped is not None:
-            big = big.observe(
-                dropped,
-                F.coalesce(F.count("*"), F.lit(0)).alias("dropped_buckets"),
-                F.coalesce(F.sum("__n"), F.lit(0)).alias("dropped_rows"),
-            )
+        _, big = _valve(sizes, F.col("__n"), max_bucket, dropped, "dropped_rows")
         # tiny (only over-cap keys); persisted so both anti-joins read one
         # computation and the observation fires exactly once
         big = big.persist()
@@ -806,7 +843,7 @@ def minhash_join(
         id_col,
         text_col,
         ngram,
-    ).select(F.col(id_col).alias("id_a"), F.col("units").alias("u_a"))
+    )
     ub = doc_unit_arrays(
         _spread_for_shingle(
             right.join(cands.select(F.col("id_b").alias(id_col)).distinct(),
@@ -814,17 +851,8 @@ def minhash_join(
         id_col,
         text_col,
         ngram,
-    ).select(F.col(id_col).alias("id_b"), F.col("units").alias("u_b"))
-    return (
-        cands.join(ua, "id_a")
-        .join(ub, "id_b")
-        .withColumn("c", F.size(F.array_intersect(F.col("u_a"), F.col("u_b"))))
-        .withColumn(
-            "jaccard", F.col("c") / (F.size("u_a") + F.size("u_b") - F.col("c"))
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
+    return _jaccard_verify(cands, ua, ub, id_col, threshold)
 
 
 def shared_span_pairs(
@@ -1397,9 +1425,10 @@ def simhash_pairs(
     Manku et al. (WWW'07); the bucket-collect shape (vs. a self-join that
     would execute the simhash fold twice) matches lsh_candidate_pairs.
 
-    ``max_bucket``: same 100 TB safety valve as LSH — slices shared by
-    more than this many docs are dropped before |bucket|^2 expansion
-    (members still pair through their other, more selective slices).
+    ``max_bucket``: the 100 TB skew valve (``_valve``, ints or
+    ``"auto"``) — slices shared by more than this many docs are dropped
+    before |bucket|^2 expansion (members still pair through their other,
+    more selective slices).
     ``banded=False`` keeps the quadratic reference shape for small-n
     verification only. ``bits``: at 10^9+ docs use wide hashes (up to
     60) — k+1 bands over 32 bits give only 2^(32/(k+1)) distinct slice
@@ -1449,50 +1478,10 @@ def simhash_pairs(
         )
         .filter(F.size("ms") >= 2)
     )
-    if max_bucket == "auto":
-        # same corpus-derived cap as lsh_candidate_pairs (one extra
-        # bounded-result aggregation job); persisted so the simhash
-        # fold upstream runs once, not twice
-        from pyspark import StorageLevel  # noqa: PLC0415
-
-        buckets = buckets.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_aux_cache(buckets)
-        q = buckets.select(F.size("ms").alias("s")).approxQuantile(
-            "s", [0.999], 0.001
-        )
-        max_bucket = int(max(AUTO_VALVE_FLOOR, (q[0] if q else 0) * AUTO_VALVE_MULT))
     if max_bucket is not None:
-        if dropped is None:
-            global _LAST_VALVE_ACCT
-            _LAST_VALVE_ACCT = (buckets, "ms", max_bucket)
-        if dropped is not None:
-            over = F.size("ms") > max_bucket
-            buckets = buckets.observe(
-                dropped,
-                F.coalesce(
-                    F.sum(F.when(over, 1).otherwise(0)), F.lit(0)
-                ).alias("dropped_buckets"),
-                F.coalesce(
-                    F.sum(F.when(over, F.size("ms")).otherwise(0)), F.lit(0)
-                ).alias("dropped_docs"),
-            )
-        buckets = buckets.filter(F.size("ms") <= max_bucket)
-    # same double-Generate expansion as lsh_candidate_pairs (see the
-    # comment there): posexplode + explode(tail slice) streams the
-    # pairs through codegen; the hamming distance moves to a top-level
-    # projection over the two struct refs — identical pair set/values
+        buckets, _ = _valve(buckets, F.size("ms"), max_bucket, dropped)
     return (
-        buckets.select(F.col("ms"), F.posexplode("ms").alias("__i", "__x"))
-        .select(
-            F.col("__x"),
-            F.explode(
-                F.slice(
-                    F.col("ms"),
-                    F.col("__i") + 2,
-                    F.greatest(F.size("ms") - F.col("__i") - 1, F.lit(0)),
-                )
-            ).alias("__y"),
-        )
+        _bucket_pairs(buckets, "ms", "__x", "__y")
         .select(
             F.col("__x")["id"].alias("id_a"),
             F.col("__y")["id"].alias("id_b"),
@@ -1578,8 +1567,6 @@ def clean_corpus(
     ``dropped_buckets`` / ``dropped_docs`` when the valve fires (read
     ``dropped.get`` after the first action on the result).
     """
-    from pyspark import StorageLevel
-
     from hindex_spark.operators.text import quality_score
 
     qualified = df.filter(quality_score(F.col(text_col)) >= min_quality)
@@ -1591,13 +1578,7 @@ def clean_corpus(
     deduped = exact_dedup(qualified, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # production-entry-point valve resolution (minhash_join semantics):
-    # BY_HASH keeps the constant cap on md5 and goes corpus-adaptive on
-    # the production digest
-    if max_bucket == BY_HASH:
-        resolved_bucket = DEFAULT_MAX_BUCKET if hash_fn == "md5" else "auto"
-    else:
-        resolved_bucket = _resolve_valve(max_bucket, hash_fn)
+    resolved_bucket = _resolve_valve(max_bucket, hash_fn, md5_cap=DEFAULT_MAX_BUCKET)
     if method == "lsh":
         pairs = minhash_dedup_pairs(
             deduped, id_col, text_col, jaccard_threshold, ngram,

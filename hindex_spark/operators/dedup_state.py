@@ -27,21 +27,23 @@ from __future__ import annotations
 
 from typing import Optional, Union
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from hindex_spark.operators import dedup
 from hindex_spark.operators.artifact import KeyedStore, clear_tombstones
 from hindex_spark.operators.dedup import (
-    AUTO_VALVE_FLOOR,
-    AUTO_VALVE_MULT,
     BY_HASH,
-    DEFAULT_MAX_BUCKET,
     N_HASHES,
     _band_rows,
+    _hashed_units,
+    _jaccard_verify,
+    _register_aux_cache,
     _resolve_valve,
     _rotate_caches,
-    _hashed_units,
     _signature_lane_cols,
+    _valve,
     doc_unit_arrays,
     shingle_expr,
 )
@@ -211,8 +213,6 @@ class DedupState(KeyedStore):
         if self.band_mod is None:
             self._insert(rows)
             return
-        from pyspark import StorageLevel  # noqa: PLC0415
-
         rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             self._insert_pair(
@@ -253,14 +253,16 @@ class DedupState(KeyedStore):
 
         ``max_bucket`` defaults to ``BY_HASH`` resolved against the
         STORE's hash family (minhash_join's production-entry-point
-        semantics): md5 keeps the constant DEFAULT_MAX_BUCKET cap,
-        xxhash64 derives the cap from the store's own bucket-size
-        distribution (``"auto"``)."""
+        semantics): md5 keeps the constant ``dedup.DEFAULT_MAX_BUCKET``
+        cap, xxhash64 derives the cap from the store's own bucket-size
+        distribution (``"auto"``). The valve measures the corpus side
+        only (the batch side is bounded by the batch); ``dropped``
+        reports ``dropped_buckets`` / ``dropped_rows``, and without it
+        ``last_valve_drops()`` does."""
         id_col, text_col = self.id_col, self.text_col
-        if max_bucket == BY_HASH:
-            max_bucket = DEFAULT_MAX_BUCKET if self.hash_fn == "md5" else "auto"
-        else:
-            max_bucket = _resolve_valve(max_bucket, self.hash_fn)
+        max_bucket = _resolve_valve(
+            max_bucket, self.hash_fn, md5_cap=dedup.DEFAULT_MAX_BUCKET
+        )
         state = self.df
 
         # exact pass: exists_batch shape — semi-restrict the state's fp
@@ -309,18 +311,10 @@ class DedupState(KeyedStore):
                 state.drop("__fp"), id_col, self.band_size
             ).select(F.col(id_col).alias("id_b"), "band", "bucket")
         if max_bucket is not None:
-            # corpus-side valve (the batch side is bounded by the batch):
-            # over-cap (band, bucket) keys are boilerplate, not near-dups.
             # ``cb`` feeds BOTH the size pass and the candidate join —
             # persist the narrow (id, band, bucket) frame so the state
             # scan + band explode runs once, not twice (guide §2.4; the
             # cache is adopted by this call's _rotate_caches).
-            from pyspark import StorageLevel as _SL  # noqa: PLC0415
-
-            from hindex_spark.operators.dedup import (  # noqa: PLC0415
-                _register_aux_cache as _reg_aux,
-            )
-
             if isinstance(max_bucket, int) and dropped is None:
                 # TOUCHED-BUCKET narrowing (constant cap, no caller
                 # accounting): only buckets the BATCH bands touch can
@@ -345,8 +339,8 @@ class DedupState(KeyedStore):
                     # signature fold runs once for the collect, the
                     # semi-join broadcast and the candidate join —
                     # previously it ran once per broadcast build.
-                    bb = bb.persist(_SL.MEMORY_AND_DISK)
-                    _reg_aux(bb)
+                    bb = bb.persist(StorageLevel.MEMORY_AND_DISK)
+                    _register_aux_cache(bb)
                     touched = sorted({
                         r["bk"]
                         for r in bb.select(
@@ -361,33 +355,10 @@ class DedupState(KeyedStore):
                     F.broadcast(bb.select("band", "bucket").distinct()),
                     ["band", "bucket"], "left_semi",
                 )
-            cb = cb.drop("bk").persist(_SL.MEMORY_AND_DISK)
-            _reg_aux(cb)
+            cb = cb.drop("bk").persist(StorageLevel.MEMORY_AND_DISK)
+            _register_aux_cache(cb)
             sizes = cb.groupBy("band", "bucket").agg(F.count("*").alias("__n"))
-            if max_bucket == "auto":
-                # corpus-adaptive cap, same formula as lsh_candidate_pairs;
-                # persist the size agg before the sketch action so the
-                # state-band scan upstream runs once, not twice (the
-                # cache is adopted by this call's _rotate_caches)
-                from pyspark import StorageLevel  # noqa: PLC0415
-
-                from hindex_spark.operators.dedup import _register_aux_cache
-
-                sizes = sizes.persist(StorageLevel.MEMORY_AND_DISK)
-                _register_aux_cache(sizes)
-                q = sizes.select(
-                    F.col("__n").cast("double").alias("s")
-                ).approxQuantile("s", [0.999], 0.001)
-                max_bucket = int(
-                    max(AUTO_VALVE_FLOOR, (q[0] if q else 0) * AUTO_VALVE_MULT)
-                )
-            big = sizes.filter(F.col("__n") > max_bucket)
-            if dropped is not None:
-                big = big.observe(
-                    dropped,
-                    F.coalesce(F.count("*"), F.lit(0)).alias("dropped_buckets"),
-                    F.coalesce(F.sum("__n"), F.lit(0)).alias("dropped_rows"),
-                )
+            _, big = _valve(sizes, F.col("__n"), max_bucket, dropped, "dropped_rows")
             cb = cb.join(
                 F.broadcast(big.select("band", "bucket")),
                 ["band", "bucket"], "left_anti",
@@ -405,23 +376,16 @@ class DedupState(KeyedStore):
                 id_col, "left_semi",
             ),
             id_col, text_col, self.ngram,
-        ).select(F.col(id_col).alias("id_a"), F.col("units").alias("u_a"))
+        )
         ub = doc_unit_arrays(
             corpus.join(
                 F.broadcast(cands.select(F.col("id_b").alias(id_col)).distinct()),
                 id_col, "left_semi",
             ),
             id_col, text_col, self.ngram,
-        ).select(F.col(id_col).alias("id_b"), F.col("units").alias("u_b"))
-        near = (
-            cands.join(ua, "id_a")
-            .join(ub, "id_b")
-            .withColumn("c", F.size(F.array_intersect(F.col("u_a"), F.col("u_b"))))
-            .withColumn(
-                "jaccard", F.col("c") / (F.size("u_a") + F.size("u_b") - F.col("c"))
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select(F.col("id_a").alias(id_col)).distinct()
         )
+        near = _jaccard_verify(cands, ua, ub, id_col, threshold).select(
+            F.col("id_a").alias(id_col)
+        ).distinct()
         _rotate_caches(cands)
         return fresh.join(near, id_col, "left_anti")

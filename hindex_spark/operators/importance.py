@@ -543,6 +543,8 @@ class ImportanceModel:
         m = ImportanceModel.open(cat, "docs_en")   # next day
     """
 
+    kind = "importance"
+
     def __init__(self, catalog, name: str, text_col: str,
                  n_buckets: int = N_BUCKETS, hash_fn: str = "md5"):
         self.catalog = catalog
@@ -557,7 +559,7 @@ class ImportanceModel:
         return os.path.join(self.catalog.root, f"{self.name}_importance_fit")
 
     def _meta_path(self) -> str:
-        return meta_path(self.catalog.root, self.name, "importance")
+        return meta_path(self.catalog.root, self.name, self.kind)
 
     @classmethod
     def fit(cls, catalog, name: str, target: DataFrame, raw: DataFrame,
@@ -589,7 +591,7 @@ class ImportanceModel:
 
     @classmethod
     def open(cls, catalog, name: str) -> "ImportanceModel":
-        meta = read_meta(meta_path(catalog.root, name, "importance"))
+        meta = read_meta(meta_path(catalog.root, name, cls.kind))
         return cls(catalog, name, meta["text_col"], meta["n_buckets"],
                    meta["hash_fn"])
 

@@ -21,8 +21,8 @@ from one side). So:
    — all variants reachable by deleting up to ``d`` characters
    (``C(L, <=d)`` variants: L+1 at d=1, ~L^2/2 at d=2).
 2. CANDIDATES (one shuffle keyed by variant): strings sharing a variant
-   pair up — sum-of-|bucket|^2 cost, the exact LSH contract
-   ``lsh_candidate_pairs`` already enforces for Jaccard, with the same
+   pair up (``dedup._bucket_pairs``, the LSH searches' in-bucket pair
+   expansion) — sum-of-|bucket|^2 cost, the LSH contract, with a
    ``max_bucket`` boilerplate valve (a variant shared by thousands of
    keys is a formulaic stem, not a near-match signal, and its
    quadratic expansion is what blocking exists to avoid; true pairs
@@ -46,8 +46,11 @@ from __future__ import annotations
 
 from typing import Optional, Union
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hindex_spark.operators.dedup import _bucket_pairs, _rotate_caches
 
 #: the deletion-neighborhood radius this module supports (see module
 #: docstring for why d >= 3 is refused)
@@ -149,10 +152,6 @@ def edit_distance_pairs(
     shuffle, a thresholded verify over distinct-string pairs, two
     group-expansion joins — the ``minhash_dedup_pairs`` cost shape
     with exactness instead of recall."""
-    from pyspark import StorageLevel
-
-    from hindex_spark.operators.dedup import _rotate_caches
-
     # ``groups`` feeds FOUR consumers (variant signatures, both sides
     # of the group expansion, and the intra-group pair pass): left
     # lazy, the scan + text-keyed collect_set aggregation executed four
@@ -193,27 +192,7 @@ def edit_distance_pairs(
     )
     if max_bucket is not None:
         buckets = buckets.filter(F.size("ts") <= max_bucket)
-    # Pair expansion as TWO codegen'd Generate operators (posexplode of
-    # the bucket + explode of each element's tail slice) instead of one
-    # interpreted nested-``transform`` that materialized every bucket's
-    # full pair array before exploding it: higher-order lambdas run
-    # interpreted per element (guide §1.2), and the array-of-structs
-    # intermediate was pure allocation — same pair set (x at 0-based
-    # position i pairs with every later element, exactly the old
-    # slice(i+2..) window), streamed row-at-a-time through codegen.
-    cand = (
-        buckets.select(F.col("ts"), F.posexplode("ts").alias("__i", "t_a"))
-        .select(
-            "t_a",
-            F.explode(
-                F.slice(
-                    F.col("ts"),
-                    F.col("__i") + 2,
-                    F.greatest(F.size("ts") - F.col("__i") - 1, F.lit(0)),
-                )
-            ).alias("t_b"),
-        )
-    )
+    cand = _bucket_pairs(buckets, "ts", "t_a", "t_b")
     # verify BEFORE dedup: a pair appears once per distinct shared
     # variant — measured ~2% duplication at sf0.1 (977.5k expanded vs
     # 956k distinct) — so distinct-first shuffled ~4x the rows the
@@ -243,26 +222,12 @@ def edit_distance_pairs(
             "dist",
         )
     )
-    # intra-group pairs: identical strings, distance 0 by identity —
-    # same double-Generate expansion as the candidate stage above (on a
-    # heavily-duplicated corpus these pairs DOMINATE the output: the
-    # 10x-duplicated sf1 table's ~27M pairs are mostly intra-group, so
-    # the interpreted array-of-structs shape was hottest exactly here)
-    intra = (
-        groups.filter(F.size("__ids") >= 2)
-        .select(F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice(
-                    F.col("__ids"),
-                    F.col("__i") + 2,
-                    F.greatest(F.size("__ids") - F.col("__i") - 1, F.lit(0)),
-                )
-            ).alias("id_b"),
-        )
-        .select("id_a", "id_b", F.lit(0).cast("int").alias("dist"))
-    )
+    # intra-group pairs: identical strings, distance 0 by identity (on
+    # a heavily-duplicated corpus these pairs DOMINATE the output: the
+    # 10x-duplicated sf1 table's ~27M pairs are mostly intra-group)
+    intra = _bucket_pairs(
+        groups.filter(F.size("__ids") >= 2), "__ids", "id_a", "id_b"
+    ).select("id_a", "id_b", F.lit(0).cast("int").alias("dist"))
     return cross.unionByName(intra)
 
 

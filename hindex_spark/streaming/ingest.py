@@ -79,10 +79,13 @@ def state_scaled_partitions(spark, input_bytes: int,
 
     Results are partition-count independent (state keying is
     unchanged); only the checkpoint layout differs, and each caller
-    starts a fresh checkpoint. Keep the context open across
-    ``start()`` AND ``awaitTermination()`` — micro-batches re-plan
-    under the current conf — and read the sink after exit so batch
-    plans see the session default again."""
+    starts a fresh checkpoint. The count is set through the
+    SESSION-GLOBAL ``spark.sql.shuffle.partitions``, so this assumes one
+    query is planned at a time on the session: a query another thread
+    plans inside the context gets the same width. Keep the context
+    open across ``start()`` AND ``awaitTermination()`` — micro-batches
+    re-plan under the current conf — and read the sink after exit so
+    batch plans see the session default again."""
     floor = max(1, min(4, spark.sparkContext.defaultParallelism))
     n = max(floor, min((int(input_bytes) + target_bytes - 1) // target_bytes,
                        4 * spark.sparkContext.defaultParallelism))
@@ -96,13 +99,18 @@ def state_scaled_partitions(spark, input_bytes: int,
 
 
 def dir_bytes(path: str) -> int:
-    """Total payload bytes in a local source directory (the size proxy
-    ``state_scaled_partitions`` keys on). Hidden/marker files skipped."""
+    """Total payload bytes in a local source directory tree (the size
+    proxy ``state_scaled_partitions`` keys on), partition subdirectories
+    (``key=value/``) included. Hidden/marker files and directories
+    (``.``/``_`` prefixed, e.g. ``_spark_metadata``) are skipped, as
+    Spark's file sources skip them."""
     total = 0
-    with os.scandir(path) as it:
-        for e in it:
-            if e.is_file() and not e.name.startswith((".", "_")):
-                total += e.stat().st_size
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        total += sum(
+            os.path.getsize(os.path.join(root, f))
+            for f in files if not f.startswith((".", "_"))
+        )
     return total
 
 

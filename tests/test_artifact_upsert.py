@@ -294,6 +294,8 @@ def test_post_compact_insert_column_order_all_stores(spark, sf_dir, tmp_path):
 def test_list_artifacts_discovers_all_kinds(spark, sf_dir, tmp_path):
     from hindex_spark.operators.ann_index import AnnIndex
     from hindex_spark.operators.artifact import list_artifacts
+    from hindex_spark.operators.joinview import JoinView
+    from hindex_spark.operators.profile import ProfileStore
     from hindex_spark.operators.rollup import HOUR_US, RollupStore
 
     docs = _docs(spark, sf_dir).limit(30)
@@ -310,6 +312,16 @@ def test_list_artifacts_discovers_all_kinds(spark, sf_dir, tmp_path):
     assert list_artifacts(cat) == [
         ("a", "search_index"), ("b", "dedup_state"),
         ("c", "ann_index"), ("d", "rollup_store"),
+    ]
+    ProfileStore.build(cat, events.select("event_type", "value"),
+                       ["event_type", "value"], "e")
+    JoinView.build(cat, docs.select("doc_id", "text"),
+                   docs.select("doc_id", F.length("text").alias("n")),
+                   "doc_id", "f", num_buckets=2)
+    assert list_artifacts(cat) == [
+        ("a", "search_index"), ("b", "dedup_state"),
+        ("c", "ann_index"), ("d", "rollup_store"),
+        ("e", "profile_store"), ("f", "join_view"),
     ]
 
 

@@ -54,6 +54,10 @@ def test_bucketed_put_no_exchange_on_table_side(spark, sf_dir, tmp_path):
     (bucketed) table must not reshuffle the stored table — only the
     (small) put batch gets an Exchange into the bucket layout."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # the batch's one Exchange lands directly in the bucket layout when
+    # the session's shuffle width equals the bucket count (8 here)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         cat = Catalog(spark, str(tmp_path / "whb"))
         t = Table.from_parquet(spark, f"{sf_dir}/orders.parquet", "o_orderkey", "orders")
@@ -71,6 +75,7 @@ def test_bucketed_put_no_exchange_on_table_side(spark, sf_dir, tmp_path):
         assert out.df.count() == t.df.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        spark.conf.set("spark.sql.shuffle.partitions", width)
 
 
 def test_snapshot_is_immutable_copy(spark, sf_dir, tmp_path):

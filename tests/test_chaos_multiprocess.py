@@ -37,8 +37,6 @@ from hindex_spark.catalog import Catalog, SaveContentionError
 from hindex_spark.index.spec import IndexSpecification
 from hindex_spark.table import Table
 
-pytestmark = pytest.mark.slow  # property/fuzz/chaos tier: run explicitly with -m slow (see pytest.ini)
-
 wh, sync = sys.argv[1], sys.argv[2]
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.shuffle.partitions", "2")

@@ -1451,7 +1451,7 @@ def test_perplexity_partition_exact_tertiles(spark):
     assert max(by_label["middle"]) < min(by_label["tail"])
 
 
-def test_lsh_auto_valve_floor_and_outlier_drop(spark, monkeypatch):
+def test_lsh_auto_valve_floor_and_outlier_drop(spark, monkeypatch, tmp_path):
     import hindex_spark.operators.dedup as ddm
 
     # 20 identical boilerplate docs (one hot bucket per band) + two
@@ -1481,6 +1481,25 @@ def test_lsh_auto_valve_floor_and_outlier_drop(spark, monkeypatch):
         df, "doc_id", "text", 0.0, 0.9, method="lsh", max_bucket="auto"
     )
     assert out.count() >= 3  # one boilerplate survivor + near-dup keepers
+    # DedupState reads the same patched floor/multiplier: the boilerplate
+    # bucket is dropped, so a near-copy of the footer finds no candidate
+    # and survives, while a near-copy of a genuine pair is still caught
+    from hindex_spark.catalog import Catalog
+    from hindex_spark.operators.dedup_state import DedupState
+
+    st = DedupState.build(Catalog(spark, str(tmp_path / "wh")), df,
+                          "doc_id", "text", "auto_valve", num_buckets=4)
+    batch = spark.createDataFrame(
+        [(300, "the same boilerplate footer text repeated everywhere again"),
+         (301, "alpha beta gamma delta epsilon zeta eta theta kappa")],
+        "doc_id long, text string",
+    )
+    kept = {r["doc_id"] for r in st.dedup_batch(
+        batch, df, threshold=0.8, max_bucket="auto").collect()}
+    unvalved = {r["doc_id"] for r in st.dedup_batch(
+        batch, df, threshold=0.8, max_bucket=None).collect()}
+    assert unvalved == set()
+    assert kept == {300}
 
 
 def test_dsir_weights_partition_invariant(spark):

@@ -242,3 +242,29 @@ def test_default_valve_counts_real_drops(spark):
     got = dd.last_valve_drops()
     assert got is not None and got["dropped_buckets"] > 0
     assert got["dropped_docs"] >= 2 * got["dropped_buckets"]
+
+
+def test_cross_corpus_search_records_its_valve_drops(spark):
+    """last_valve_drops() reports the most recent valved search,
+    cross-corpus ones included: after a self search that dropped
+    buckets, a minhash_join that drops nothing must read 0/0, not the
+    self search's numbers."""
+    bp = "terms of service apply to all content on this site " * 4
+    docs = spark.createDataFrame(
+        [(i, bp + w) for i, w in enumerate(["alpha", "beta", "gamma"])],
+        "doc_id long, text string",
+    )
+    dd.minhash_dedup_pairs(docs, "doc_id", "text", 0.7,
+                           hash_fn="xxhash64", max_bucket=1).count()
+    assert dd.last_valve_drops()["dropped_buckets"] > 0
+    left = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    right = spark.createDataFrame(
+        [(2, "a completely different sentence about something else")],
+        "doc_id long, text string",
+    )
+    dd.minhash_join(left, right, "doc_id", "text", 0.8,
+                    max_bucket=4096).count()
+    assert dd.last_valve_drops() == {"dropped_buckets": 0, "dropped_docs": 0}

@@ -107,3 +107,28 @@ def test_state_scaled_partitions_derivation_and_restore(spark):
     except RuntimeError:
         pass
     assert spark.conf.get(key) == before
+
+
+def test_dir_bytes_walks_partition_directories(spark, tmp_path):
+    """A partitionBy source keeps its payload one level down
+    (``k=v/part-*.parquet``): dir_bytes must sum it, or
+    state_scaled_partitions would size the stream at 0 bytes. Marker
+    files and the ``_``-prefixed metadata directory stay excluded."""
+    import os
+
+    from hindex_spark.streaming.ingest import dir_bytes
+
+    src = tmp_path / "src"
+    spark.range(200).select(
+        (F.col("id") % 3).alias("k"), F.col("id")
+    ).write.partitionBy("k").parquet(str(src))
+    (src / "_spark_metadata").mkdir()
+    (src / "_spark_metadata" / "0").write_text("x" * 1000)
+    want = 0
+    for root, _, files in os.walk(src):
+        if "_spark_metadata" in root:
+            continue
+        want += sum(os.path.getsize(os.path.join(root, f))
+                    for f in files if f.endswith(".parquet"))
+    assert want > 0
+    assert dir_bytes(str(src)) == want
