@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hindex_spark.session import local_frame
+
 # Mutation op codes (KeyValue.Type analogs)
 PUT = "put"
 DELETE_VERSION = "delete_version"  # Type.Delete — one exact version
@@ -42,12 +44,13 @@ CELL_SCHEMA = T.StructType(
 
 
 def empty_cells(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], CELL_SCHEMA)
+    return cells_from_rows(spark, [])
 
 
 def cells_from_rows(spark: SparkSession, rows: Sequence[tuple]) -> DataFrame:
-    """rows of (rowkey, cf, qualifier, ts, op, value)."""
-    return spark.createDataFrame(list(rows), CELL_SCHEMA)
+    """rows of (rowkey, cf, qualifier, ts, op, value), as a JVM local
+    relation: ``resolve`` scans the cells once per tombstone kind."""
+    return local_frame(spark, rows, CELL_SCHEMA)
 
 
 def resolve(

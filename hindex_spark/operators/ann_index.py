@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from hindex_spark.operators.artifact import KeyedStore, clear_tombstones
 from hindex_spark.operators.dedup import cosine_expr
 from hindex_spark.operators.similarity import ivf_build, ivf_topk
+from hindex_spark.session import local_frame
 
 
 def assign_to_centroids(
@@ -493,8 +494,8 @@ class AnnIndex(KeyedStore):
                 (r[q_id_col], r["cluster"], lut[i].tolist(),
                  float(q_norm[i]), qc)
             )
-        return self.catalog.spark.createDataFrame(
-            out,
+        return local_frame(
+            self.catalog.spark, out,
             f"{q_id_col} {qid_ddl}, cluster int, lut array<array<double>>, "
             "q_norm double, qc double",
         )

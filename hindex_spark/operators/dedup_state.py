@@ -12,12 +12,18 @@ index-maintenance pattern (index/build.py:59) applied to dedup state.
 Per-batch cost with the store (batch ≪ corpus):
   * exact pass — the state's fingerprint column is semi-restricted to
     the BROADCAST batch fingerprints (stream the state scan, no
-    shuffle), then the batch anti-joins the (tiny) hit set;
-  * near-dup pass — corpus band rows derive from the STORED signatures
-    (a map-only explode over the narrow state table, never the text)
-    and join the broadcast batch bands; candidate verification
-    re-shingles ONLY docs named in a candidate pair (the corpus text is
-    semi-joined down to candidate ids before tokenization).
+    shuffle), then the batch anti-joins the (tiny) hit set; this state
+    read runs under the batch-sized local checkpoint on the surviving
+    batch, so a result's executed plan shows it only as an ExistingRDD
+    scan;
+  * near-dup pass — corpus band rows come from the bk-bucketed BAND
+    SIDE TABLE (``band_table_name``, written from the stored signatures
+    at build/append time, never from the text) and join the broadcast
+    batch bands; the map-only explode over the narrow state table is
+    only the fallback for a store with no band side table (``band_mod``
+    is None). Candidate verification re-shingles ONLY docs named in a
+    candidate pair (the corpus text is semi-joined down to candidate
+    ids before tokenization).
 The corpus parquet is scanned exactly once per batch — for candidate
 verification — and never through the signature fold. Asserted by
 ``tests/test_pipeline_ops.py::test_dedup_state_corpus_not_reshingled``.

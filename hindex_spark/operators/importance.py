@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from hindex_spark.operators.artifact import meta_path, read_meta, write_meta
 from hindex_spark.operators.dedup import _unit_hash
 from hindex_spark.operators.text import tokens
+from hindex_spark.session import local_frame
 
 #: default feature-space width; 8k buckets is the paper's hashed n-gram
 #: regime scaled to fit a broadcast (8k rows ~ 100 KB serialized)
@@ -498,8 +499,10 @@ def perplexity_partition(
     for pid in sorted(sizes):
         offsets[pid] = acc
         acc += sizes[pid]
-    off_df = part.sparkSession.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "__pid int, __off long"
+    off_df = local_frame(
+        part.sparkSession,
+        [(int(p), int(o)) for p, o in offsets.items()],
+        "__pid int, __off long",
     )
     k1, k2 = (n + 2) // 3, (2 * n + 2) // 3  # ceil(n/3), ceil(2n/3)
     w = Window.partitionBy("__pid").orderBy(F.col("h"), F.col(id_col))

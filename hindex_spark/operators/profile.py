@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hindex_spark.operators.artifact import GenerationStore, clear_tombstones
+from hindex_spark.session import local_frame
 from hindex_spark.timeutil import ts_micros
 
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint", "long")
@@ -73,8 +74,8 @@ def histogram(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
     spark = df.sparkSession
     if lo is None or lo == hi:
         n = df.filter(v.isNotNull()).count()
-        return spark.createDataFrame(
-            [(0, float(lo or 0), float(hi or 0), n)],
+        return local_frame(
+            spark, [(0, float(lo or 0), float(hi or 0), n)],
             "bin long, lo double, hi double, cnt long",
         )
     width = (hi - lo) / bins
@@ -131,8 +132,8 @@ def correlations(df: DataFrame, cols: List[str]) -> DataFrame:
     row = df.agg(*aggs).first()
     pairs = [(a, b) for ai, a in enumerate(cols) for b in cols[ai + 1:]]
     out = [(a, b, row[i]) for i, (a, b) in enumerate(pairs)]
-    return df.sparkSession.createDataFrame(
-        out, "col_a string, col_b string, corr double"
+    return local_frame(
+        df.sparkSession, out, "col_a string, col_b string, corr double"
     )
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hindex_spark.operators.dedup import cosine_expr
+from hindex_spark.session import local_frame
 
 N_PLANES = 8
 _DIM = 64
@@ -230,7 +231,7 @@ def ivf_build(
         return embeddings.filter(F.pmod(F.hash(F.col(id_col)), F.lit(m)) == 0)
 
     def _cent_df(rows):
-        return spark.createDataFrame(rows, f"cluster int, centroid array<double>")
+        return local_frame(spark, rows, "cluster int, centroid array<double>")
 
     train = _train_df(mod)
     init = train.orderBy(id_col).limit(n_clusters).collect()
@@ -592,10 +593,12 @@ def pq_topk(
         lut_rows.append((r[q_id_col], lut, q_norm))
     # the query-id type follows the caller's queries frame (string ids
     # are as legal here as in brute_force_topk — hardcoding long would
-    # crash createDataFrame for them)
+    # crash local_frame for them)
     qid_ddl = queries.schema[q_id_col].dataType.simpleString()
-    qlut = spark.createDataFrame(
-        lut_rows, f"{q_id_col} {qid_ddl}, lut array<array<double>>, q_norm double"
+    qlut = local_frame(
+        spark,
+        lut_rows,
+        f"{q_id_col} {qid_ddl}, lut array<array<double>>, q_norm double",
     )
     approx = (
         codes_df.crossJoin(F.broadcast(qlut))

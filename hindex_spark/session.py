@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -69,6 +70,35 @@ def get_spark(app_name: str = "hindex_spark", cpus: int | None = None) -> SparkS
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-side rows, built through Arrow into a JVM
+    LocalRelation.
+
+    ``spark.createDataFrame(list)`` parallelizes the rows into an RDD
+    with no size statistics: every scan of it decodes the rows in a
+    Python worker task per partition (~0.2 s each on a 4-core host), and
+    the planner can never broadcast it. The local relation is scanned in
+    the JVM and carries its real size. ``schema`` is a StructType or a
+    DDL string without timestamp fields. A row of the wrong width or a
+    None in a non-nullable field is refused, as createDataFrame does.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    if any(len(r) != len(arrow) for r in rows):
+        raise ValueError(f"rows must have {len(arrow)} fields: {schema.simpleString()}")
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow)]
+    for a, f in zip(arrays, arrow):
+        if a.null_count and not f.nullable:
+            raise ValueError(f"field {f.name} is not nullable, but got None")
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):

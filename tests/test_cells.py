@@ -2,11 +2,14 @@
 compaction (TestDelete / TestScanWhenTTLExpired / ScanQueryMatcher model,
 F4 fixture)."""
 
+import pytest
+
 from hindex_spark.cells import (
     DELETE_COLUMN,
     DELETE_FAMILY,
     DELETE_ROW,
     DELETE_VERSION,
+    cells_from_rows,
 )
 from hindex_spark.table import CellTable
 
@@ -214,3 +217,17 @@ def test_ttl_expired_index_scan_returns_nothing(spark):
     )
     assert got2.count() == 4
     assert t2.last_index_plan.used_indexes == ["ScanIndexf"]
+
+
+def test_cells_are_a_jvm_local_relation(spark):
+    # resolve scans its input once per tombstone kind: the cells must be
+    # a LocalRelation (scanned in the JVM, with real size statistics),
+    # not a parallelized Python list that a Python worker decodes in
+    # every one of those scans
+    t = _base(spark).delete_cells([("r1", "cf1", "a", 2, DELETE_COLUMN)])
+    plan = t.cells._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    with pytest.raises(ValueError, match="not nullable"):
+        CellTable(spark).put_cells([(None, "cf1", "a", 1, "v")])
+    with pytest.raises(ValueError, match="fields"):
+        cells_from_rows(spark, [("r1", "cf1", "a", 1, "put")])

@@ -763,9 +763,11 @@ def test_dedup_state_update_appends_batch(spark, tmp_path):
 def test_dedup_state_corpus_not_reshingled(spark, sf_dir, tmp_path):
     # The steady-state contract: dedup_batch's plan reads the corpus
     # parquet EXACTLY once (candidate verification, semi-joined to
-    # candidate ids) — signatures and fingerprints come from the store,
-    # so no per-batch corpus re-shingle. The state table scan (bucketed)
-    # must appear instead.
+    # candidate ids), so no per-batch corpus re-shingle. Signatures come
+    # from the store's band side table, whose scan must appear in the
+    # plan. Fingerprints come from the state table, read by the exact
+    # pass under the batch-sized local checkpoint on ``fresh``, so the
+    # result's plan shows that read only as an ExistingRDD scan.
     from hindex_spark.catalog import Catalog
     from hindex_spark.operators.dedup_state import DedupState
 
@@ -780,10 +782,11 @@ def test_dedup_state_corpus_not_reshingled(spark, sf_dir, tmp_path):
         out = st.dedup_batch(batch, corpus, threshold=0.9)
         p = out._jdf.queryExecution().executedPlan().toString()
         assert p.count("documents.parquet") == 1  # verification scan only
-        assert "c3_dedupstate_bucketed" in p       # signatures from the store
+        assert st.band_table_name in p             # signatures from the store
         assert out.count() == 1
     finally:
-        spark.sql("DROP TABLE IF EXISTS c3_dedupstate_bucketed")
+        for t in ("c3_dedupstate_bucketed", "c3_dedupstate_bands_bucketed"):
+            spark.sql(f"DROP TABLE IF EXISTS `{cat.bucketed_sql_name(t)}`")
 
 
 def test_shared_span_pairs_partial_overlap(spark):
